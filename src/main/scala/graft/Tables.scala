@@ -1,20 +1,81 @@
 package graft
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-/** Loaders for the driver-provided parquet tables (TESTDATA.md).
+/** Loaders for the parquet tables the pipelines read (TESTDATA.md).
   *
-  * The reference maps each external table through a Flink `create_table`
-  * DDL (reference: flink-applications/01-basic-jdbc.json:4-22); here the
-  * same role is played by a thin source abstraction over `spark.read`.
-  * Parquet for the offline harness; the JDBC branch keeps the same shape
-  * for a real deployment. Column pruning + filter pushdown are Catalyst's
-  * job — callers `.select`/`.where` immediately and the scan only reads
-  * the referenced columns (verify with `.explain`: ReadSchema/PushedFilters).
+  * The reference declares each external table's schema once, in its Flink
+  * `create_table` DDL (reference: flink-applications/01-basic-jdbc.json:4-22).
+  * Here [[table]] infers a table's parquet schema the first time it is
+  * opened and remembers it. Inference submits a Spark job that reads a
+  * parquet footer, so an hourly job that opens five tables would otherwise
+  * launch five such jobs before its query starts.
+  *
+  * The remembered schema is reused only while its key is unchanged:
+  *  - the qualified table path;
+  *  - the modification time of the table directory (or file), which an
+  *    append or overwrite moves;
+  *  - the session confs that change what inference derives from the same
+  *    files ([[InferenceConfs]]).
+  * The memo is process-wide, so sessions that share a key share the
+  * schema. It relies on the filesystem moving the directory mtime on
+  * every write into it: a file swapped in place with the mtime put back
+  * keeps the old schema. A filesystem that reports no modification time
+  * (0, as object stores do for directories) gets a fresh inference on
+  * every call.
+  *
+  * File listings are never cached: every call lists the table again, so a
+  * job sees the files added since the last call. Column pruning and filter
+  * pushdown are Catalyst's job: callers `.select`/`.where` immediately and
+  * the scan reads only the referenced columns (verify with `.explain`:
+  * ReadSchema/PushedFilters).
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+
+  /** Session confs that change the schema parquet inference derives from
+    * the same files. [[events]] sets the first. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive")
+
+  private final case class Resolved(mtime: Long, confs: Seq[Option[String]],
+      schema: StructType)
+
+  /** Qualified table path -> the schema last inferred there. */
+  private val resolved = new ConcurrentHashMap[String, Resolved]()
+
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = new Path(s"$dir/$name.parquet")
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // stat BEFORE inferring: a write that races the inference leaves an
+    // mtime newer than the remembered one, so the next call re-infers.
+    // A missing path goes to spark.read, which reports it as usual.
+    val mtime =
+      try fs.getFileStatus(path).getModificationTime
+      catch { case _: FileNotFoundException => 0L }
+    if (mtime <= 0L) spark.read.parquet(path.toString)
+    else {
+      val key = fs.makeQualified(path).toString
+      val confs = InferenceConfs.map(spark.conf.getOption)
+      Option(resolved.get(key)).filter(r => r.mtime == mtime && r.confs == confs) match {
+        case Some(r) => spark.read.schema(r.schema).parquet(path.toString)
+        case None =>
+          val df = spark.read.parquet(path.toString)
+          resolved.put(key, Resolved(mtime, confs, df.schema))
+          df
+      }
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

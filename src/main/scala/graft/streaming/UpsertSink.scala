@@ -76,91 +76,6 @@ object UpsertSink {
     * the table mid-swap deterministically. */
   private[graft] var midSwapPause: () => Unit = () => ()
 
-  /** Whether a Delta Lake runtime can execute MERGE in this session:
-    * the delta-spark jar must be on the classpath AND the session must
-    * have been BUILT with Delta's SQL extension (it cannot be retrofitted
-    * onto a live session). The extension is visible either through the
-    * `spark.sql.extensions` conf (spark-submit style) or through the
-    * injected parser's class (programmatic `.withExtensions(...)` never
-    * sets the conf). Feature detection only — no compile-time dependency
-    * on Delta anywhere in this file.
-    *
-    * Sandbox note: no delta-spark jar exists in /opt/spark/jars or the
-    * offline coursier cache (verified round 5; the environment has zero
-    * egress), so the MERGE branch's dispatch and guard are tested but
-    * the MERGE SQL itself has never executed here — it runs the first
-    * time the library meets a real Delta-enabled session. */
-  def deltaAvailable(spark: SparkSession): Boolean =
-    scala.util.Try(Class.forName("io.delta.sql.DeltaSparkSessionExtension")).isSuccess && {
-      spark.conf.getOption("spark.sql.extensions")
-        .exists(_.contains("DeltaSparkSessionExtension")) ||
-        spark.sessionState.sqlParser.getClass.getName.toLowerCase.contains("delta")
-    }
-
-  /** Delta-format merge: same latest-per-key + tombstone + version-gate
-    * semantics as the parquet path, expressed as one MERGE INTO statement
-    * (real snapshot isolation, no swap protocol needed — this is the
-    * production shape the parquet harness stands in for). Uses only SQL
-    * strings and a `_delta_log` existence probe, so it compiles without
-    * Delta and dispatches at runtime when [[deltaAvailable]]. */
-  private def mergeBatchDelta(batch: DataFrame, keyCols: Seq[String],
-      versionCol: String, path: String, deleteCol: Option[String],
-      tiebreakCols: Seq[String]): Unit = {
-    val spark = batch.sparkSession
-    require(deltaAvailable(spark),
-      "format=delta requires the delta-spark jar on the classpath and a session " +
-        "built with spark.sql.extensions=io.delta.sql.DeltaSparkSessionExtension")
-    val delCol = deleteCol.getOrElse("_no_delete")
-    val tagged = (deleteCol match {
-      case Some(c) => batch.withColumn(c, coalesce(col(c), lit(false)))
-      case None => batch.withColumn(delCol, lit(false))
-    })
-    // latest image per key WITHIN the batch (at-least-once delivery can
-    // carry several versions of a key in one micro-batch); the cross-
-    // table version gate lives in the MERGE conditions
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy((col(versionCol).desc +: tiebreakCols.map(col(_).desc)): _*)
-    val latest = tagged.withColumn("_rn", row_number().over(w))
-      .where(col("_rn") === 1).drop("_rn")
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(path, "_delta_log"))) {
-      latest.where(!col(delCol)).drop(delCol)
-        .write.format("delta").mode("overwrite").save(path)
-    } else {
-      // schema evolution, mirroring the parquet path: columns the batch
-      // ADDS are declared on the target first (ALTER TABLE — Delta
-      // metadata-only), columns the batch LACKS ride as nulls so the
-      // UPDATE/INSERT lists always reference the union surface
-      val stored = spark.read.format("delta").load(path).schema.fields.toSeq
-      val storedNames = stored.map(_.name).toSet
-      val batchAdds = latest.schema.fields
-        .filterNot(f => f.name == delCol || storedNames.contains(f.name))
-      if (batchAdds.nonEmpty)
-        spark.sql(s"ALTER TABLE delta.`$path` ADD COLUMNS (" +
-          batchAdds.map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ") + ")")
-      val widened = stored.filterNot(f => latest.columns.contains(f.name))
-        .foldLeft(latest)((acc, f) => acc.withColumn(f.name, lit(null).cast(f.dataType)))
-      val dataCols = widened.columns.filterNot(_ == delCol).toSeq
-      val view = s"graft_merge_src_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      widened.createOrReplaceTempView(view)
-      try {
-        val onClause = keyCols.map(k => s"t.`$k` <=> s.`$k`").mkString(" AND ")
-        val setClause = dataCols.map(c => s"t.`$c` = s.`$c`").mkString(", ")
-        val insCols = dataCols.map(c => s"`$c`").mkString(", ")
-        val insVals = dataCols.map(c => s"s.`$c`").mkString(", ")
-        // clause order matters: versions strictly older than the stored
-        // row fall through every WHEN and are ignored (replay safety);
-        // ties take the batch image, matching the parquet path
-        spark.sql(
-          s"""MERGE INTO delta.`$path` t USING $view s ON $onClause
-             |WHEN MATCHED AND s.`$delCol` AND s.`$versionCol` >= t.`$versionCol` THEN DELETE
-             |WHEN MATCHED AND NOT s.`$delCol` AND s.`$versionCol` >= t.`$versionCol` THEN UPDATE SET $setClause
-             |WHEN NOT MATCHED AND NOT s.`$delCol` THEN INSERT ($insCols) VALUES ($insVals)
-             |""".stripMargin)
-      } finally spark.catalog.dropTempView(view)
-    }
-  }
-
   /** Merge one (micro-)batch into the keyed parquet table at `path`.
     * - batch rows are deduped to latest-per-key by (versionCol, tiebreak);
     * - rows with `deleteCol = true` act as tombstones;
@@ -183,17 +98,7 @@ object UpsertSink {
   def mergeBatch(batch: DataFrame, keyCols: Seq[String], versionCol: String,
       path: String, deleteCol: Option[String] = None,
       tiebreakCols: Seq[String] = Nil,
-      nBuckets: Int = DefaultBuckets,
-      format: String = "parquet"): Unit = {
-    format match {
-      case "parquet" => // the zero-dependency default below
-      case "delta" =>
-        mergeBatchDelta(batch, keyCols, versionCol, path, deleteCol, tiebreakCols)
-        return
-      case other =>
-        throw new IllegalArgumentException(
-          s"unsupported upsert format '$other' (supported: parquet, delta)")
-    }
+      nBuckets: Int = DefaultBuckets): Unit = {
     val spark = batch.sparkSession
     // latest-wins ACROSS batch and existing table: CDC delivery is
     // at-least-once and may replay old events, so an image (or tombstone)
@@ -479,13 +384,12 @@ object UpsertSink {
   /** Attach the upsert sink to a streaming changelog. */
   def writeUpsertStream(decoded: DataFrame, keyCols: Seq[String],
       versionCol: String, path: String, checkpoint: String,
-      deleteCol: Option[String] = None,
-      format: String = "parquet"): StreamingQuery =
+      deleteCol: Option[String] = None): StreamingQuery =
     decoded.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeBatch(batch, keyCols, versionCol, path, deleteCol, format = format)
+        mergeBatch(batch, keyCols, versionCol, path, deleteCol)
       }
       .trigger(Trigger.AvailableNow())
       .start()

@@ -23,6 +23,56 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("ReadSchema: struct<l_orderkey:bigint,l_linenumber:int,l_quantity:double>"), plan)
   }
 
+  test("hourly jobs q01/q02: hour bounds reach the orders scan below the explode; dims broadcast") {
+    import java.sql.Timestamp
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, GenerateExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    import graft.model.Pizzeria.PizzeriaTables
+    import graft.queries.Scenarios
+    object walk extends AdaptiveSparkPlanHelper
+    val dir = java.nio.file.Files.createTempDirectory("hourly_plan").toString
+    val base = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
+    Seq((0, "margherita", 8.0), (1, "diavola", 9.5)).toDF("id", "name", "price")
+      .write.parquet(s"$dir/pizzas.parquet")
+    Seq((0, "t0", 4), (1, "t1", 2)).toDF("id", "name", "seats").write.parquet(s"$dir/tables.parquet")
+    Seq((0, "ann"), (1, "bob")).toDF("id", "name").write.parquet(s"$dir/clients.parquet")
+    Seq((0, 0, 0), (1, 1, 1)).toDF("id", "client_id", "table_id")
+      .write.parquet(s"$dir/assignments.parquet")
+    (0 until 48).map(i => (i, i % 2, new Timestamp(base + i * 30 * 60 * 1000L), Seq(i % 2, 0, 0)))
+      .toDF("id", "table_assignment_id", "order_time", "pizzas")
+      .write.parquet(s"$dir/orders.parquet")
+    val t = PizzeriaTables(
+      tables = Tables.table(spark, dir, "tables"), pizzas = Tables.table(spark, dir, "pizzas"),
+      clients = Tables.table(spark, dir, "clients"),
+      assignments = Tables.table(spark, dir, "assignments"),
+      orders = Tables.table(spark, dir, "orders"))
+    val eval = lit(new Timestamp(base + 5 * 3600 * 1000L + 1))
+    for ((name, q) <- Seq("q01" -> Scenarios.q01BasicJoin(t, eval),
+        "q02" -> Scenarios.q02ViewFilter(t, eval))) {
+      val n = q.collect().length
+      assert(n == 2, s"$name: the hour (05:00, 06:00] holds two orders, got $n")
+      val plan = q.queryExecution.executedPlan
+      val ordersScan = walk.collect(plan) {
+        case s: FileSourceScanExec if s.relation.location.rootPaths.exists(
+          _.getName == "orders.parquet") => s
+      }
+      assert(ordersScan.size == 1, s"$name: one orders scan\n$plan")
+      val pushed = ordersScan.head.metadata("PushedFilters")
+      assert(pushed.contains("GreaterThan(order_time,") &&
+        pushed.contains("LessThanOrEqual(order_time,"), s"$name: $pushed")
+      val generates = walk.collect(plan) { case g: GenerateExec => g }
+      assert(generates.size == 1, s"$name: one explode\n$plan")
+      val hourFilter = walk.collect(generates.head) {
+        case f: FilterExec if f.condition.references.exists(_.name == "order_time") => f
+      }
+      assert(hourFilter.nonEmpty, s"$name: the hour filter must sit below the explode\n$plan")
+      assert(walk.collect(plan) { case j: BroadcastHashJoinExec => j }.size == 4, s"$name\n$plan")
+      assert(walk.collect(plan) { case j: SortMergeJoinExec => j }.isEmpty, s"$name\n$plan")
+    }
+  }
+
   test("join_inner_equi: dims broadcast; one partial-agg exchange on the group keys") {
     val plan = finalPlan(graft.ops.RefOps.queries("join_inner_equi")(spark, d))
     assert("BroadcastHashJoin".r.findAllIn(plan).size >= 4, plan)

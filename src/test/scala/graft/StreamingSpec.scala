@@ -113,47 +113,6 @@ class StreamingSpec extends SparkSpec {
     assert(got == Map(1 -> "v1c", 3 -> "v3"))
   }
 
-  test("mergeBatch format dispatch: unknown format rejected; delta guarded by feature detection") {
-    import spark.implicits._
-    val df = Seq((1, "v1", 10L)).toDF("id", "v", "ver")
-    val dir = Files.createTempDirectory("upsert_fmt").toString + "/t"
-    intercept[IllegalArgumentException] {
-      UpsertSink.mergeBatch(df, Seq("id"), "ver", dir, format = "iceberg")
-    }
-    if (!UpsertSink.deltaAvailable(spark)) {
-      // no delta runtime in this environment: the delta branch must fail
-      // loudly at dispatch, not half-write a table
-      val e = intercept[IllegalArgumentException] {
-        UpsertSink.mergeBatch(df, Seq("id"), "ver", dir, format = "delta")
-      }
-      assert(e.getMessage.contains("delta"))
-      assert(!new java.io.File(dir).exists(), "failed dispatch must not create the table")
-    }
-  }
-
-  test("delta-format merge: latest wins, tombstone deletes, stale replay ignored") {
-    // runs only where a delta-spark jar + delta-enabled session exist
-    // (feature-detected); cancels otherwise — the dispatch-level guard
-    // above still runs everywhere
-    assume(UpsertSink.deltaAvailable(spark), "no Delta runtime on classpath")
-    import spark.implicits._
-    val dir = Files.createTempDirectory("upsert_delta").toString + "/t"
-    UpsertSink.mergeBatch(
-      Seq((1, "v1", 10L, false), (2, "v2", 10L, false)).toDF("id", "v", "ver", "del"),
-      Seq("id"), "ver", dir, deleteCol = Some("del"), format = "delta")
-    UpsertSink.mergeBatch(
-      Seq((1, "v1b", 20L, false), (1, "v1c", 30L, false),
-          (2, "gone", 25L, true), (3, "v3", 21L, false)).toDF("id", "v", "ver", "del"),
-      Seq("id"), "ver", dir, deleteCol = Some("del"), format = "delta")
-    // stale replay: must not regress key 1
-    UpsertSink.mergeBatch(
-      Seq((1, "stale", 5L, false)).toDF("id", "v", "ver", "del"),
-      Seq("id"), "ver", dir, deleteCol = Some("del"), format = "delta")
-    val got = spark.read.format("delta").load(dir).select("id", "v")
-      .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
-    assert(got == Map(1 -> "v1c", 3 -> "v3"))
-  }
-
   test("bucketed merge rewrites only touched buckets; untouched files byte-identical") {
     import spark.implicits._
     import java.nio.file.{Files => JFiles, Paths => JPaths}
