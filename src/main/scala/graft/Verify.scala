@@ -17,17 +17,16 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // the 74-query sweep exceeds the default 100-entry codegen cache
-      // (see Bench.scala) — not a correctness concern, just avoids
-      // recompiling generated classes across queries
+      // a sweep over every key can exceed the default 100-entry codegen
+      // cache — not a correctness concern, just avoids recompiling
+      // generated classes across queries
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // per-key wall seconds (build + write) → verify_times.json, so a
-    // sweep's cost can be diffed BY KEY across rounds instead of
-    // re-run (the bench_history discipline applied to the sweep; the
-    // DuckDB side records its own times in check_oracle's TALLY)
+    // sweep's cost can be diffed BY KEY across runs instead of re-run
+    // (the DuckDB side records its own times in check_oracle's TALLY)
     val times = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -55,7 +55,5 @@ object SqlMacros {
     // PROCTIME() — processing-time column (03-flink-cdc-jdbc.json:4);
     // evaluates per micro-batch under streaming.
     registerMacro(spark, "proctime", "current_timestamp()")
-    graft.expressions.VectorExpressions.register(spark)
-    graft.expressions.TextShingles.register(spark)
   }
 }

@@ -918,10 +918,9 @@ object RefOps {
     * tenth document decommissioned (dropped from the refresh), every
     * seventh re-extracted with revised content, and one NEWLY CRAWLED
     * document per ~nine standing (keyed at -(doc_id+1): negative ids
-    * are disjoint from any non-negative standing id space at every SF,
-    * including ScaleUp's replica-shifted blocks — no magic offset to
-    * collide with). All three mutations are doc_id arithmetic, so the
-    * oracle reproduces the twin exactly. */
+    * are disjoint from any non-negative standing id space at every SF —
+    * no magic offset to collide with). All three mutations are doc_id
+    * arithmetic, so the oracle reproduces the twin exactly. */
   private[graft] def refreshedDocs(s: SparkSession, d: String): DataFrame =
     graft.Tables.documents(s, d)
       .where(pmod(col("doc_id"), lit(10)) =!= 3)
@@ -943,10 +942,9 @@ object RefOps {
     * regardless of row multiplicity. Content is compared by md5
     * FINGERPRINT, not raw text — the 100 TB spelling: the set-op
     * shuffle keys on 32 hex chars per row instead of whole document
-    * bodies (the [[graft.ops.TextOps.fingerprint]] discipline; md5(NULL)
-    * is NULL in both engines and set ops treat NULLs as equal, so
-    * null-text documents reconcile correctly). ~23 % of the corpus at
-    * any SF (1/10 dropped + 6/70 revised) — non-vacuous by
+    * bodies (md5(NULL) is NULL in both engines and set ops treat NULLs
+    * as equal, so null-text documents reconcile correctly). ~23 % of the
+    * corpus at any SF (1/10 dropped + 6/70 revised) — non-vacuous by
     * construction. */
   val setExceptRefresh: Q = (s, d) => {
     val standing = graft.Tables.documents(s, d)

@@ -42,10 +42,10 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * fact stream never shuffles for enrichment.
   *
   * The ledger fold ([[ledgerFromDir]]) elects per fact key: the
-  * matched row of the MINIMUM batch id if any (first-match-wins — the
-  * [[MinhashDedupIngest]] posture, so an out-of-order replay cannot
-  * rewrite history), else the placeholder (all placeholder rows for a
-  * key are byte-identical by the replay argument). After the dim
+  * matched row of the MINIMUM batch id if any (first-match-wins, so an
+  * out-of-order replay cannot rewrite history), else the placeholder
+  * (all placeholder rows for a key are byte-identical by the replay
+  * argument). After the dim
   * stream closes, the ledger is byte-equal to the batch operator over
   * the full fact ∪ dim frames (EnrichIngestSpec pins it, plus the
   * mid-stream placeholder state the batch form can't see).

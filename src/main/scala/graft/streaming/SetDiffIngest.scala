@@ -24,8 +24,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * so the recompute is byte-identical to the first delivery;
   * re-appended registry rows collapse under the (doc_id, fp,
   * batch_id) DISTINCT read. Decisions additionally fold
-  * first-delivery-wins (min batch id per doc — the
-  * [[MinhashDedupIngest]] posture) so even an out-of-order replay
+  * first-delivery-wins (min batch id per doc) so even an out-of-order replay
   * cannot overwrite history.
   *
   * Fingerprints compare NULL-SAFELY (`<=>`) and presence is decided by
@@ -108,19 +107,17 @@ object SetDiffIngest {
         processBatch(b.sparkSession, dir, b, id)
       }
 
-  /** Compact the DECISION log to its first-delivery fold — safe for
-    * exactly the [[MinhashDedupIngest]] reason (a replay's batch id is
-    * ≥ the kept minimum, so min_by keeps electing the kept row). The
-    * fp REGISTRY is deliberately NOT compactable: its probe filters on
-    * `batch_id < b`, so the fold a replayed batch b needs is the
-    * registry's history BELOW b, and any rewrite that collapses ids
-    * destroys it (a doc whose only surviving row carries an id ≥ b
-    * would read as ABSENT to the replay and re-decide 'added'). The
-    * registry joins the additive stores in [[IndexCompaction]]'s
-    * replay-horizon class: compactable only once offsets are committed
-    * strictly beyond every logged batch — an argument this harness
-    * can't check, so the module refuses to offer it rather than offer
-    * it wrong. */
+  /** Compact the DECISION log to its first-delivery fold — safe
+    * because a replay's batch id is ≥ the kept minimum, so min_by keeps
+    * electing the kept row. The fp REGISTRY is deliberately NOT
+    * compactable: its probe filters on `batch_id < b`, so the fold a
+    * replayed batch b needs is the registry's history BELOW b, and any
+    * rewrite that collapses ids destroys it (a doc whose only surviving
+    * row carries an id ≥ b would read as ABSENT to the replay and
+    * re-decide 'added'). The registry is compactable only once offsets
+    * are committed strictly beyond every logged batch — an argument
+    * this module can't check, so it refuses to offer it rather than
+    * offer it wrong. */
   def compact(s: SparkSession, dir: String): Unit =
     IndexCompaction.compactFirstDelivery(s, dir + "/decisions",
       Seq("doc_id"))

@@ -9,12 +9,10 @@ import org.scalatest.TagAnnotation;
 
 /**
  * Class-level ScalaTest tag for the long-exposure suites (streaming
- * byte-parity replays, determinism/corrupt-input/empty-input sweeps):
- * excluded from the DEFAULT {@code sbt test} tier so a bounded harness
- * window gets a COMPLETED run with a summary line (r13: the driver's
- * 47-minute full run was cut off mid-suite and the round shipped with
- * no independent test signal). Run the full set with
- * {@code SPARK_GRAFT_TEST_FULL=1 sbt test} — the round report does, once.
+ * twin replays, determinism/corrupt-input/empty-input sweeps): excluded
+ * from the DEFAULT {@code sbt test} tier so a bounded test window gets a
+ * COMPLETED run with a summary line. Run the full set with
+ * {@code SPARK_GRAFT_TEST_FULL=1 sbt test}.
  */
 @TagAnnotation
 @Inherited

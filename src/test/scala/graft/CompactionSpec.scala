@@ -85,27 +85,26 @@ class CompactionSpec extends SparkSpec {
 
   test("crash between the swap renames self-heals at the next compaction entry") {
     val dir = java.nio.file.Files.createTempDirectory("graft_cmp_crash").toString
-    val ids = docs2.select("doc_id")
-    streaming.BottomkSampleIngest.buildSampleIndex(
-      spark, ids.where(col("doc_id") % 2 === 0), dir)
-    streaming.BottomkSampleIngest.processBatch(
-      spark, dir, ids.where(col("doc_id") % 2 === 1), 1L)
-    val before = streaming.BottomkSampleIngest.sampleFromDir(spark, dir).collect().toSeq
-    // simulate the r9-advisor crash window: the live log parked at .old,
-    // nothing at the store path (died after rename 1, before rename 2)
-    val cands = java.nio.file.Paths.get(dir, "cands")
-    java.nio.file.Files.move(cands, java.nio.file.Paths.get(dir, "cands.old"))
-    assert(!java.nio.file.Files.exists(cands))
+    val refreshed = graft.ops.RefOps.refreshedDocs(spark, sf)
+    streaming.SetDiffIngest.buildFpIndex(spark, docs2, dir)
+    (0 to 1).foreach(i => streaming.SetDiffIngest.processBatch(
+      spark, dir, refreshed.where(pmod(col("doc_id"), lit(2)) === i), i.toLong))
+    val before = streaming.SetDiffIngest.diffFromDir(spark, dir).collect().toSeq
+    // simulate the crash window: the live log parked at .old, nothing
+    // at the store path (died after rename 1, before rename 2)
+    val decisions = java.nio.file.Paths.get(dir, "decisions")
+    java.nio.file.Files.move(decisions, java.nio.file.Paths.get(dir, "decisions.old"))
+    assert(!java.nio.file.Files.exists(decisions))
     // the next compaction heals the window, then folds normally
-    streaming.BottomkSampleIngest.compact(spark, dir)
-    assert(streaming.BottomkSampleIngest.sampleFromDir(spark, dir).collect().toSeq == before,
+    streaming.SetDiffIngest.compact(spark, dir)
+    assert(streaming.SetDiffIngest.diffFromDir(spark, dir).collect().toSeq == before,
       "recovery + compaction must reproduce the pre-crash fold")
     // healthy store: recovery is a no-op and reports it
-    assert(!streaming.IndexCompaction.recoverIfInterrupted(spark, cands.toString))
+    assert(!streaming.IndexCompaction.recoverIfInterrupted(spark, decisions.toString))
     // manual reader-side recovery works too (window re-simulated)
-    java.nio.file.Files.move(cands, java.nio.file.Paths.get(dir, "cands.old"))
-    assert(streaming.IndexCompaction.recoverIfInterrupted(spark, cands.toString))
-    assert(streaming.BottomkSampleIngest.sampleFromDir(spark, dir).collect().toSeq == before)
+    java.nio.file.Files.move(decisions, java.nio.file.Paths.get(dir, "decisions.old"))
+    assert(streaming.IndexCompaction.recoverIfInterrupted(spark, decisions.toString))
+    assert(streaming.SetDiffIngest.diffFromDir(spark, dir).collect().toSeq == before)
   }
 
   test("minhash band index: compaction is probe- and decision-invariant and shrinks the log") {

@@ -128,9 +128,9 @@ class CorruptInputSpec extends SparkSpec {
   // must survive the corrupt corpus, and a newly registered operator is
   // enrolled automatically. No exemptions — even src_datagen (which
   // ignores the directory) costs nothing to keep under the net.
-  for (name <- SparkEntry.queries.keys.toSeq.sorted) {
+  for (name <- LegacyEntry.queries.keys.toSeq.sorted) {
     test(s"$name survives null/empty/truncated rows") {
-      SparkEntry.queries(name)(spark, dir).collect()
+      LegacyEntry.queries(name)(spark, dir).collect()
     }
   }
 
@@ -139,11 +139,11 @@ class CorruptInputSpec extends SparkSpec {
     // vector passes `nrm > 0`, its NaN cosine passes `> 0.3`, and DESC
     // sort makes it the rank-1 neighbor of every query — the gate's
     // !isnan is what this pins
-    val pairs = SparkEntry.queries("dedup_embedding_cosine")(spark, dir)
+    val pairs = LegacyEntry.queries("dedup_embedding_cosine")(spark, dir)
       .collect().flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
     assert(!pairs.exists(_ >= 3L),
       s"corrupt vectors (ids 3-6) must never appear in cosine pairs, got $pairs")
-    val top = SparkEntry.queries("sim_brute_topk")(spark, dir)
+    val top = LegacyEntry.queries("sim_brute_topk")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     assert(top.forall(_._3 < 3L),
       s"corrupt vectors must never rank as neighbors, got ${top.toSeq}")
@@ -155,17 +155,17 @@ class CorruptInputSpec extends SparkSpec {
     // nrm = Infinity passes `> 0` and `!isnan`, but Inf/Inf = NaN and
     // NaN outranks every real sim under DESC in BOTH engines — the
     // finiteness clause of EmbGate is what this pins
-    val pairs = SparkEntry.queries("dedup_embedding_cosine")(spark, dir)
+    val pairs = LegacyEntry.queries("dedup_embedding_cosine")(spark, dir)
       .collect().flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
     assert(!pairs.contains(7L), s"the all-Inf vector must be gated, got $pairs")
-    val top = SparkEntry.queries("sim_brute_topk")(spark, dir)
+    val top = LegacyEntry.queries("sim_brute_topk")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     assert(top.forall(_._3 != 7L),
       s"the all-Inf vector must never rank as a neighbor, got ${top.toSeq}")
   }
 
   test("duplicate-key props count the key once and never kill the stage") {
-    val keys = SparkEntry.queries("events_props_keys")(spark, dir)
+    val keys = LegacyEntry.queries("events_props_keys")(spark, dir)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(keys("dup") == 1L, s"duplicate key must count once per event: $keys")
     assert(keys("k") == 5L, s"clean keys must all survive: $keys")
@@ -176,7 +176,7 @@ class CorruptInputSpec extends SparkSpec {
     // in DuckDB's — excluded up front, the CDF sees only observed
     // lengths (docs 1-6: 69,69,0,0,6,5 → CDF 0:2 5:3 6:4 69:6;
     // ceil(.5*6)=3 → p50=5, ceil(.9*6)=6 → p90=69, p99=69)
-    val q = SparkEntry.queries("corpus_quantiles")(spark, dir)
+    val q = LegacyEntry.queries("corpus_quantiles")(spark, dir)
       .collect().map(r => r.getDouble(0) -> r.getLong(1)).toMap
     assert(q == Map(0.5 -> 5L, 0.9 -> 69L, 0.99 -> 69L),
       s"quantiles must be over non-null lengths only, got $q")
@@ -186,14 +186,14 @@ class CorruptInputSpec extends SparkSpec {
     // Spark's concat_ws SKIPS a null inside a trigram while SQL's ||
     // nulls the whole path — both sides now filter null-typed events
     // before the window, so adjacency skips over them consistently
-    val paths = SparkEntry.queries("events_path_topk")(spark, dir)
+    val paths = LegacyEntry.queries("events_path_topk")(spark, dir)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(paths == Map("view>click>purchase" -> 1L),
       s"null-typed events must be invisible to adjacency, got $paths")
   }
 
   test("revenue stats: null types bucket as 'unknown', null values never dilute the mean") {
-    val rows = SparkEntry.queries("events_revenue_stats")(spark, dir)
+    val rows = LegacyEntry.queries("events_revenue_stats")(spark, dir)
       .collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
         if (r.isNullAt(6)) None else Some(r.getDouble(6)))).toMap
@@ -207,11 +207,11 @@ class CorruptInputSpec extends SparkSpec {
   test("clean rows still dedup across the corrupt neighbors") {
     // docs 1 and 2 are byte-identical; the corrupt rows around them must
     // not stop the pair from being found
-    val exact = SparkEntry.queries("dedup_exact")(spark, dir)
+    val exact = LegacyEntry.queries("dedup_exact")(spark, dir)
       .where(col("n_copies") > 1).collect()
     assert(exact.exists(_.getAs[Long]("keeper") == 1L),
       "the clean duplicate pair must survive corrupt neighbors")
-    val cos = SparkEntry.queries("dedup_embedding_cosine_lsh")(spark, dir)
+    val cos = LegacyEntry.queries("dedup_embedding_cosine_lsh")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(cos.contains((1L, 2L)),
       "the clean near-identical vectors must pair despite corrupt neighbors")

@@ -94,7 +94,7 @@ class DeterminismSpec extends SparkSpec {
     test(s"$name is identical under 3 vs 11 shuffle partitions") {
       val prev = spark.conf.get("spark.sql.shuffle.partitions")
       def run(): Seq[String] =
-        SparkEntry.queries(name)(spark, d).collect().map(_.toString).toSeq
+        LegacyEntry.queries(name)(spark, d).collect().map(_.toString).toSeq
       try {
         spark.conf.set("spark.sql.shuffle.partitions", "3")
         val a = run()

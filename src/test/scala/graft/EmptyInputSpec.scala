@@ -95,13 +95,13 @@ class EmptyInputSpec extends SparkSpec {
 
   for (name <- emptyOut) {
     test(s"$name returns zero rows on an empty corpus") {
-      assert(SparkEntry.queries(name)(spark, emptyDir).count() == 0L)
+      assert(LegacyEntry.queries(name)(spark, emptyDir).count() == 0L)
     }
   }
 
   for (name <- runsOnly) {
     test(s"$name runs on an empty corpus (zero-count report, no throw)") {
-      SparkEntry.queries(name)(spark, emptyDir).collect()
+      LegacyEntry.queries(name)(spark, emptyDir).collect()
     }
   }
 }

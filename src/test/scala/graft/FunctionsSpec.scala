@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.Functions._
+import graft.functions.LegacyFunctions._
 
 /** Property-style tests (seeded random inputs) for the scalar function
   * layer and the custom expressions' equivalence to their declarative
@@ -229,7 +230,7 @@ class FunctionsSpec extends SparkSpec {
     val sh = graft.Tables.documents(spark, d)
       .select(col("doc_id"), explode(expr("text_shingles(text, 3)")).as("sh"))
     val aggs = (0 until k).map(i =>
-      min(graft.functions.Functions.seededMd5(col("sh"), i)).as(s"s$i"))
+      min(graft.functions.LegacyFunctions.seededMd5(col("sh"), i)).as(s"s$i"))
     val reference = sh.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
       .collect().map(r => r.getLong(0) -> (1 to k).map(r.getString).toVector).toMap
     val onePass = graft.Tables.documents(spark, d)
@@ -293,7 +294,7 @@ class FunctionsSpec extends SparkSpec {
   test("int8 quantization: codes in [-127,127], reconstruction error <= scale/2") {
     val d = "/root/testdata/sf0.001"
     val qz = graft.ops.SimOps.queries("emb_quantize_int8")(spark, d)
-    val joined = qz.join(graft.Tables.embeddings(spark, d), "vec_id")
+    val joined = qz.join(graft.LegacyTables.embeddings(spark, d), "vec_id")
       .selectExpr("vec_id", "scale",
         "transform(split(qvec, ','), x -> cast(x as int)) AS q",
         "embedding")

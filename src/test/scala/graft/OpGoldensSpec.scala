@@ -231,7 +231,7 @@ class OpGoldensSpec extends SparkSpec {
       if ((md.digest(s"rp:$j:$i".getBytes("UTF-8"))(0) & 1) == 0) 1 else -1
     }
     val sf = "/root/testdata/sf0.001"
-    val vecs = Tables.embeddings(spark, sf)
+    val vecs = LegacyTables.embeddings(spark, sf)
       .where(org.apache.spark.sql.functions.col("vec_id") < 5)
       .collect().map(r => r.getLong(0) ->
         r.getSeq[Float](r.fieldIndex("embedding")).toArray).toMap

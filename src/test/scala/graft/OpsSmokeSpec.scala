@@ -10,7 +10,7 @@ class OpsSmokeSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("every oracle key has a matching query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    val missing = LegacyEntry.oracleSql.keySet -- LegacyEntry.queries.keySet
     assert(missing.isEmpty, s"oracles without queries: $missing")
   }
 
@@ -18,7 +18,7 @@ class OpsSmokeSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
+  for ((name, fn) <- LegacyEntry.queries.toSeq.sortBy(_._1)) {
     test(s"query $name runs at sf0.001") {
       val df = fn(spark, sf)
       val n = df.count()

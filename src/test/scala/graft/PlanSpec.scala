@@ -94,7 +94,7 @@ class PlanSpec extends SparkSpec {
 
   test("two-phase top-k output == the naive full-window form (lossless)") {
     graft.expressions.VectorExpressions.register(spark)
-    val emb = graft.Tables.embeddings(spark, d)
+    val emb = graft.LegacyTables.embeddings(spark, d)
     val q = emb.where(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         sqrt(expr("float_dot(embedding, embedding)")).as("q_nrm"))
@@ -166,7 +166,7 @@ class PlanSpec extends SparkSpec {
     // the only Exchange allowed is the rangepartitioning for the final
     // deterministic ORDER BY (which exists solely for the oracle gate).
     for (name <- Seq("text_repetition", "sample_stratified", "text_entropy")) {
-      val plan = finalPlan(SparkEntry.queries(name)(spark, d))
+      val plan = finalPlan(LegacyEntry.queries(name)(spark, d))
       val exchanges = "Exchange \\w+".r.findAllIn(plan).toSeq
       assert(exchanges.forall(_.contains("rangepartitioning")),
         s"$name must not shuffle before the output sort:\n$plan")
@@ -489,7 +489,7 @@ class PlanSpec extends SparkSpec {
     // the train loop's ONLY corpus-touching job; everything after runs
     // on the checkpointed vocabulary frame
     val wf = graft.Tables.documents(spark, d)
-      .select(explode(split(graft.functions.Functions.normalizeText(col("text")), " ")).as("word"))
+      .select(explode(split(graft.functions.LegacyFunctions.normalizeText(col("text")), " ")).as("word"))
       .where(col("word") =!= "")
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("word")).limit(1 << 18)

@@ -11,7 +11,6 @@ import graft.streaming.{AsOfJoin, Debezium, LookupJoin, TxnBuffer, UpsertSink}
   * upsert sink with tombstones, event-time as-of join (incl. the
   * dim-update-arrives-late case and watermark gating), and the
   * processing-time lookup race (README.md:268-301) reproduced. */
-@Nightly
 class StreamingSpec extends SparkSpec {
 
   private val orderRow = StructType(Seq(
@@ -1076,7 +1075,7 @@ class StreamingSpec extends SparkSpec {
     val streamed = StreamingFunnel.funnel(events).collect()
       .groupBy(_.userId)
       .map { case (u, rs) => u -> rs.map(r => r.stage -> r.ts).toMap }
-    val batch = graft.SparkEntry.queries("events_funnel")(spark, d).collect()
+    val batch = graft.LegacyEntry.queries("events_funnel")(spark, d).collect()
       .map { r =>
         def us(i: Int): Option[Long] = Option(r.getTimestamp(i))
           .map(t => t.getTime * 1000L + (t.getNanos / 1000L) % 1000L)

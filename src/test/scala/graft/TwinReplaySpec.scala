@@ -107,7 +107,7 @@ class TwinReplaySpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
         .groupBy(_._1)
         .map { case (u, rs) => u -> rs.map(t => t._2 -> t._3).toMap }
-      val batch = SparkEntry.queries("events_funnel")(spark, D).collect()
+      val batch = LegacyEntry.queries("events_funnel")(spark, D).collect()
         .map { r =>
           def us(i: Int): Option[Long] = Option(r.getTimestamp(i)).map(usOf)
           r.getLong(0) -> Seq(1 -> us(1), 2 -> us(2), 3 -> us(3))
@@ -175,7 +175,7 @@ class TwinReplaySpec extends SparkSpec {
             .map(new String(_).toLong)
           (probeId, r.getAs[String]("k").toLong, buildId)
         }.toSet
-      val batch = SparkEntry.queries("join_temporal_eventtime")(spark, D).collect()
+      val batch = LegacyEntry.queries("join_temporal_eventtime")(spark, D).collect()
         .map(r => (r.getLong(0), r.getLong(1),
           if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSet
       assert(streamed == batch,
@@ -213,7 +213,7 @@ class TwinReplaySpec extends SparkSpec {
       val buildId = Option(r.getAs[Array[Byte]]("buildPayload")).map(new String(_).toLong)
       (probeId, r.getAs[String]("k").toLong, buildId)
     }.toSet
-    val batch = SparkEntry.queries("join_temporal_eventtime")(spark, D).collect()
+    val batch = LegacyEntry.queries("join_temporal_eventtime")(spark, D).collect()
       .map(r => (r.getLong(0), r.getLong(1),
         if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSet
     assert(streamed == batch,
@@ -244,7 +244,7 @@ class TwinReplaySpec extends SparkSpec {
       val Array(id, tpe) = new String(r.getAs[Array[Byte]]("payload")).split(':')
       (id.toLong, tpe, r.getAs[Long]("txId"), r.getAs[Boolean]("complete"))
     }.toSet
-    val batch = SparkEntry.queries("txn_buffered_emit")(spark, D).collect()
+    val batch = LegacyEntry.queries("txn_buffered_emit")(spark, D).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), true)).toSet
     assert(streamed == batch,
       s"restarted txn emit (${streamed.size} rows) != batch (${batch.size} rows)")
@@ -278,7 +278,7 @@ class TwinReplaySpec extends SparkSpec {
       .map { case (u, ss) =>
         u -> ss.sortBy(_._2).zipWithIndex
           .map { case ((_, _, n, f, l), i) => (i + 1L, n, f, l) }.toSeq }
-    val batch = SparkEntry.queries("events_sessionize")(spark, D).collect()
+    val batch = LegacyEntry.queries("events_sessionize")(spark, D).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .groupBy(_._1)
       .map { case (u, ss) =>
@@ -313,7 +313,7 @@ class TwinReplaySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .groupBy(_._1)
       .map { case (u, rs) => u -> rs.map(t => t._2 -> t._3).toMap }
-    val batch = SparkEntry.queries("events_funnel")(spark, D).collect()
+    val batch = LegacyEntry.queries("events_funnel")(spark, D).collect()
       .map { r =>
         def us(i: Int): Option[Long] = Option(r.getTimestamp(i)).map(usOf)
         r.getLong(0) -> Seq(1 -> us(1), 2 -> us(2), 3 -> us(3))
@@ -342,7 +342,7 @@ class TwinReplaySpec extends SparkSpec {
     val streamed = rows.filter(_.getAs[Long]("userId") >= 0)
       .groupBy(r => (r.getAs[Long]("cohortDayUs"), r.getAs[Int]("dayOffset")))
       .map { case (k, rs) => k -> rs.size.toLong }
-    val batch = SparkEntry.queries("events_retention")(spark, D).collect()
+    val batch = LegacyEntry.queries("events_retention")(spark, D).collect()
       .map(r => (usOf(r.getTimestamp(0)), r.getInt(1)) -> r.getLong(2)).toMap
     assert(streamed == batch,
       s"restarted retention (${streamed.size} cells) != batch (${batch.size})")
@@ -382,7 +382,7 @@ class TwinReplaySpec extends SparkSpec {
           val Array(id, tpe) = new String(r.getAs[Array[Byte]]("payload")).split(':')
           (id.toLong, tpe, r.getAs[Long]("txId"), r.getAs[Boolean]("complete"))
         }.toSet
-      val batch = SparkEntry.queries("txn_buffered_emit")(spark, D).collect()
+      val batch = LegacyEntry.queries("txn_buffered_emit")(spark, D).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2), true)).toSet
       assert(streamed == batch,
         s"streamed txn emit (${streamed.size} rows) != batch (${batch.size} rows)")
@@ -426,7 +426,7 @@ class TwinReplaySpec extends SparkSpec {
         .map { case (u, ss) =>
           u -> ss.sortBy(_._2).zipWithIndex
             .map { case ((_, _, n, f, l), i) => (i + 1L, n, f, l) }.toSeq }
-      val batch = SparkEntry.queries("events_sessionize")(spark, D).collect()
+      val batch = LegacyEntry.queries("events_sessionize")(spark, D).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
         .groupBy(_._1)
         .map { case (u, ss) =>
@@ -465,7 +465,7 @@ class TwinReplaySpec extends SparkSpec {
           java.time.Instant.ofEpochMilli(r.getTimestamp(1).getTime)
             .atZone(java.time.ZoneOffset.UTC).getHour), r.getLong(2)))
         .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).sum }
-      val batch = SparkEntry.queries("agg_hourly_count")(spark, D).collect()
+      val batch = LegacyEntry.queries("agg_hourly_count")(spark, D).collect()
         .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
       assert(streamed == batch,
         s"streamed hourly (${streamed.size} groups) != batch (${batch.size} groups)")
@@ -502,7 +502,7 @@ class TwinReplaySpec extends SparkSpec {
         .agg(sum("n").as("n_total"),
           sum(when(col("event_type") === "error", col("n")).otherwise(0L)).as("n_err"))
       val streamed = graft.ops.RefOps.errorSpikeFinalize(hourly).collect().toSeq
-      val batch = SparkEntry.queries("events_error_spike")(spark, D).collect().toSeq
+      val batch = LegacyEntry.queries("events_error_spike")(spark, D).collect().toSeq
       assert(streamed == batch,
         s"streamed spike frame (${streamed.size} hours) != batch (${batch.size})")
     } finally q.stop()
@@ -533,7 +533,7 @@ class TwinReplaySpec extends SparkSpec {
         .selectExpr("event_type", "window.start AS ws", "n")
         .collect()
         .map(r => (r.getString(0), r.getTimestamp(1).getTime) -> r.getLong(2)).toMap
-      val batch = SparkEntry.queries("agg_hop_count")(spark, D).collect()
+      val batch = LegacyEntry.queries("agg_hop_count")(spark, D).collect()
         .map(r => (r.getString(0), r.getTimestamp(1).getTime) -> r.getLong(2)).toMap
       assert(streamed == batch,
         s"streamed hop windows (${streamed.size} groups) != batch (${batch.size} groups)")
@@ -561,7 +561,7 @@ class TwinReplaySpec extends SparkSpec {
     }
     val streamed = rows.filter(_.getString(0) != "__wm__")
       .map(r => (r.getString(0), r.getTimestamp(1).getTime) -> r.getLong(2)).toMap
-    val batch = SparkEntry.queries("agg_hop_count")(spark, D).collect()
+    val batch = LegacyEntry.queries("agg_hop_count")(spark, D).collect()
       .map(r => (r.getString(0), r.getTimestamp(1).getTime) -> r.getLong(2)).toMap
     assert(streamed == batch,
       s"restarted hop windows (${streamed.size}) != batch (${batch.size})")
@@ -603,7 +603,7 @@ class TwinReplaySpec extends SparkSpec {
             .map(endUs => (t, dayUs, endUs) -> n)
         }
         .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).sum }
-      val batch = SparkEntry.queries("agg_cumulate_count")(spark, D).collect()
+      val batch = LegacyEntry.queries("agg_cumulate_count")(spark, D).collect()
         .map(r => (r.getString(0), usOf(r.getTimestamp(1)), usOf(r.getTimestamp(2))) ->
           r.getLong(3)).toMap
       assert(streamed == batch,
@@ -643,7 +643,7 @@ class TwinReplaySpec extends SparkSpec {
       val streamed = graft.streaming.UpsertSink.readKeyedTable(spark, dir).get
         .select("user_id", "event_id", "event_type")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-      val batch = SparkEntry.queries("changelog_upsert")(spark, D).collect()
+      val batch = LegacyEntry.queries("changelog_upsert")(spark, D).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
       assert(streamed == batch,
         s"upsert table (${streamed.size} keys) != batch changelog collapse (${batch.size})")
@@ -691,7 +691,7 @@ class TwinReplaySpec extends SparkSpec {
     val streamed = graft.streaming.UpsertSink.readKeyedTable(spark, table).get
       .select("user_id", "event_id", "event_type")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-    val batch = SparkEntry.queries("changelog_upsert")(spark, D).collect()
+    val batch = LegacyEntry.queries("changelog_upsert")(spark, D).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     assert(streamed == batch,
       s"restarted upsert table (${streamed.size} keys) != batch (${batch.size})")
@@ -729,7 +729,7 @@ class TwinReplaySpec extends SparkSpec {
           countDistinct(col("userId")).as("n_users"))
         .collect()
         .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      val batch = SparkEntry.queries("events_attribution")(spark, D).collect()
+      val batch = LegacyEntry.queries("events_attribution")(spark, D).collect()
         .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
       assert(streamed == batch,
         s"streamed attribution $streamed != batch $batch")
@@ -763,7 +763,7 @@ class TwinReplaySpec extends SparkSpec {
         .agg(count(lit(1)).as("n_users"))
         .collect()
         .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-      val batch = SparkEntry.queries("events_retention")(spark, D).collect()
+      val batch = LegacyEntry.queries("events_retention")(spark, D).collect()
         .map(r => (usOf(r.getTimestamp(0)), r.getInt(1)) -> r.getLong(2)).toMap
       assert(streamed == batch,
         s"streamed retention (${streamed.size} cells) != batch (${batch.size})")
@@ -838,7 +838,7 @@ class TwinReplaySpec extends SparkSpec {
           .map(endUs => (t, dayUs, endUs) -> n)
       }
       .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).sum }
-    val batch = SparkEntry.queries("agg_cumulate_count")(spark, D).collect()
+    val batch = LegacyEntry.queries("agg_cumulate_count")(spark, D).collect()
       .map(r => (r.getString(0), usOf(r.getTimestamp(1)), usOf(r.getTimestamp(2))) ->
         r.getLong(3)).toMap
     assert(streamed == batch,
@@ -932,7 +932,7 @@ class TwinReplaySpec extends SparkSpec {
   }
 
   private def simhashBatchPairs(): Set[(Long, Long, Long)] =
-    SparkEntry.queries("dedup_simhash_pairs")(spark, D).collect()
+    LegacyEntry.queries("dedup_simhash_pairs")(spark, D).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
   test("twin replay: streaming simhash near-dup over chunked MemoryStream == batch dedup_simhash_pairs") {
@@ -1027,7 +1027,7 @@ class TwinReplaySpec extends SparkSpec {
       .sortBy { case (id, _, h) => (h, id) }.toSeq
 
   private def shardBatchLayout(name: String): Seq[(Long, Int, Int, Long)] =
-    SparkEntry.queries(name)(spark, D).collect()
+    LegacyEntry.queries(name)(spark, D).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3))).toSeq
       .sortBy(t => (t._2, t._3))
 
@@ -1076,7 +1076,7 @@ class TwinReplaySpec extends SparkSpec {
       val streamed = spark.table("shard_twin_inc").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3))).toSeq
         .sortBy(t => (t._2, t._3))
-      val batch = SparkEntry.queries("corpus_shard_assign_incremental")(spark, D)
+      val batch = LegacyEntry.queries("corpus_shard_assign_incremental")(spark, D)
         .collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3))).toSeq
         .sortBy(t => (t._2, t._3))
@@ -1102,7 +1102,7 @@ class TwinReplaySpec extends SparkSpec {
   }
 
   private def substringBatchPairs(): Set[(Long, Long, Long)] =
-    SparkEntry.queries("dedup_substring")(spark, D).collect()
+    LegacyEntry.queries("dedup_substring")(spark, D).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
   private def substringFinalize(hits: Seq[org.apache.spark.sql.Row]): Set[(Long, Long, Long)] = {
@@ -1207,7 +1207,7 @@ class TwinReplaySpec extends SparkSpec {
   }
 
   private def capBatchSet: Set[(String, Long)] =
-    SparkEntry.queries("corpus_source_cap")(spark, D).collect()
+    LegacyEntry.queries("corpus_source_cap")(spark, D).collect()
       .map(r => (r.getString(1), r.getLong(0))).toSet
 
   test("twin replay: streaming source cap over chunked MemoryStream == batch corpus_source_cap") {
@@ -1256,7 +1256,7 @@ class TwinReplaySpec extends SparkSpec {
   // ---- twin #21: streaming media near-dup at ingest ----
 
   private def mediaBatchPairs(): Set[(Long, Long, Long)] =
-    SparkEntry.queries("mm_image_neardup_pairs")(spark, D).collect()
+    LegacyEntry.queries("mm_image_neardup_pairs")(spark, D).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
   test("twin replay: streaming media near-dup over chunked MemoryStream == batch mm_image_neardup_pairs") {
@@ -1325,7 +1325,7 @@ class TwinReplaySpec extends SparkSpec {
         }
         val streamed = spark.table(name).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-        val batch = SparkEntry.queries(batchKey)(spark, D).collect()
+        val batch = LegacyEntry.queries(batchKey)(spark, D).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
         assert(streamed == batch,
           s"$batchKey streamed (${streamed.size}) != batch (${batch.size}); " +

@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
   * #3): `WindowExec: No Partition Defined` moves ALL window input to a
   * single partition, which is a scale killer when the input is
   * corpus-sized — and the correct plan when the input is bounded by
-  * construction. Every unpartitioned window in src/main was audited
+  * construction. Every unpartitioned window in the two source roots
+  * (src/main and legacy/src/main) was audited
   * (r14): each runs over a frame whose row count is fixed by a named
   * model constant or a value domain, never by document count —
   * post-`limit(k)` rank stamps (BkK=200, WbkK=200, UncK, DsirK,
@@ -26,7 +27,7 @@ import scala.jdk.CollectionConverters._
   * corpus-sized unpartitioned window added later would hide in the
   * boilerplate. This suite pins the audited per-file site counts — a
   * new `Window.orderBy(...)` (the unpartitioned constructor) anywhere
-  * in src/main fails here until it is either partitioned or audited
+  * in either source root fails here until it is either partitioned or audited
   * and added to the allowlist with its bound. */
 class WindowAuditSpec extends AnyFunSuite {
 
@@ -52,21 +53,30 @@ class WindowAuditSpec extends AnyFunSuite {
     "BottomkSampleIngest.scala" -> 1,
     "WeightedSampleIngest.scala" -> 1)
 
-  test("every unpartitioned window in src/main is an audited bounded-frame site") {
-    val root = Paths.get("src", "main", "scala")
-    assert(Files.isDirectory(root), s"expected to run from the repo root, no $root")
-    val stream = Files.walk(root)
-    val counts: Map[String, Int] =
+  /** Every .scala file under the engine's source root and the legacy
+    * curation/harness root (compiled into the same project). */
+  private def sources(): Seq[java.nio.file.Path] = {
+    val roots = Seq(Paths.get("src", "main", "scala"),
+      Paths.get("legacy", "src", "main", "scala"))
+    roots.foreach(r => assert(Files.isDirectory(r),
+      s"expected to run from the repo root, no $r"))
+    roots.flatMap { r =>
+      val stream = Files.walk(r)
       try stream.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala"))
-        .map { p =>
-          val text = new String(Files.readAllBytes(p), "UTF-8")
-          p.getFileName.toString -> "Window\\s*\\.orderBy\\(".r
-            .findAllMatchIn(text).size
-        }
-        .filter(_._2 > 0)
-        .toMap
+        .filter(_.toString.endsWith(".scala")).toList
       finally stream.close()
+    }
+  }
+
+  test("every unpartitioned window in src/main is an audited bounded-frame site") {
+    val counts: Map[String, Int] = sources()
+      .map { p =>
+        val text = new String(Files.readAllBytes(p), "UTF-8")
+        p.getFileName.toString -> "Window\\s*\\.orderBy\\(".r
+          .findAllMatchIn(text).size
+      }
+      .filter(_._2 > 0)
+      .toMap
     assert(counts == audited,
       s"unpartitioned-window sites changed: found $counts, audited $audited - " +
         "a NEW Window.orderBy(...) must be partitioned (corpus-sized input) " +
@@ -74,14 +84,9 @@ class WindowAuditSpec extends AnyFunSuite {
   }
 
   test("no window is built over a fully empty spec") {
-    val root = Paths.get("src", "main", "scala")
-    val stream = Files.walk(root)
-    val offenders =
-      try stream.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala"))
-        .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(".over()"))
-        .map(_.toString).toList
-      finally stream.close()
+    val offenders = sources()
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(".over()"))
+      .map(_.toString).toList
     assert(offenders.isEmpty,
       s"empty .over() (unpartitioned AND unordered - the whole frame in one " +
         s"window state) found in: $offenders")

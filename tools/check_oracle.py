@@ -6,8 +6,8 @@ import sys, os, re, json, math, argparse, threading, subprocess
 import duckdb
 import pandas as pd
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+TABLES = ["region", "nation", "customer", "part", "orders",
+          "lineitem", "events", "documents"]
 
 def norm(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)
@@ -40,7 +40,7 @@ def fresh_con(sf_dir: str):
         if os.path.isdir(p):  # Spark-written table dir (e.g. target/sf1)
             p = f"{p}/*.parquet"
         if t == "events":
-            # ScaleUp-written events store ts as int64 nanos (Spark cannot
+            # Spark-written events store ts as int64 nanos (Spark cannot
             # write TIMESTAMP(NANOS)); normalize to the micros truncation
             # the Spark-side Tables.events reader applies, so every events
             # oracle is replayable at the scale dir with identical semantics
