@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -14,21 +14,23 @@ import org.apache.spark.sql.Row
   * Local/test materialization is a parquet "keyed table" merged per
   * micro-batch via foreachBatch. The table is laid out in hash buckets
   * of the key (`graft_bucket=K/` partition dirs) so a merge rewrites
-  * ONLY the buckets containing batch keys — per-batch write cost is
-  * O(touched buckets), not O(table), which is what survives a 100 TB
-  * result table. At cluster scale the same merge logic targets a
-  * compacted Kafka topic (append with key bytes; compaction collapses)
-  * or a MERGE-capable table format — the per-batch dedup (latest image
-  * per key) is the part that must be correct either way.
+  * ONLY the buckets containing batch keys. The bucket count follows the
+  * table's size (see [[mergeBatch]]): about one read split
+  * (`spark.sql.files.maxPartitionBytes`) per bucket. So a small table is
+  * one bucket and a merge into it writes one dir, and a large table's
+  * per-batch write cost is O(touched buckets of bounded size), not
+  * O(table). At cluster scale the same merge logic targets a compacted
+  * Kafka topic (append with key bytes; compaction collapses) or a
+  * MERGE-capable table format — the per-batch dedup (latest image per
+  * key) is the part that must be correct either way.
   */
 object UpsertSink {
 
-  /** Bucket count for the keyed-table layout. Each bucket is swapped as a
-    * unit, so this bounds both merge parallelism and rewrite granularity;
-    * at larger table sizes raise it so a single bucket stays well under
-    * executor memory. Changing it on an existing table is safe only via a
-    * full rewrite (the layout migration branch in mergeBatch). */
-  val DefaultBuckets = 64
+  /** What one [[mergeBatch]] call did, from values the merge already
+    * holds (no extra job): the table's bucket count after the merge, the
+    * bucket dirs it rewrote, and whether it rewrote the whole table
+    * (first write, layout migration, re-bucket or schema change). */
+  case class MergeStats(buckets: Int, bucketsRewritten: Int, fullRewrite: Boolean)
 
   private val BucketCol = "graft_bucket"
 
@@ -46,14 +48,38 @@ object UpsertSink {
   private def bucketOf(keyCols: Seq[String], n: Int) =
     pmod(hash(keyCols.map(col): _*), lit(n))
 
-  private def writeLayoutMarker(fs: org.apache.hadoop.fs.FileSystem,
-      target: Path, n: Int): Unit = {
+  private def writeLayoutMarker(fs: FileSystem, target: Path, n: Int): Unit = {
     val out = fs.create(new Path(target, LayoutMarker), true)
     try out.write(n.toString.getBytes("UTF-8")) finally out.close()
   }
 
-  private def readLayoutMarker(fs: org.apache.hadoop.fs.FileSystem,
-      target: Path): Option[Int] = {
+  /** Bucket count for a merge when the caller names none: the stored
+    * count, grown to the smallest power of two that gives each bucket at
+    * most one read split of the table's current bytes. A fresh table gets
+    * 1. Counts only grow, and only by powers of two, so a table is
+    * re-bucketed (one full rewrite each) at most log2 times in its life
+    * and a delete-heavy table cannot flap between counts. */
+  private[graft] def sizedBuckets(stored: Option[Int], tableBytes: Long,
+      splitBytes: Long): Int = {
+    val splits = (tableBytes + splitBytes - 1) / splitBytes
+    val bySize = if (splits <= 1) 1 else (java.lang.Long.highestOneBit(splits - 1) << 1).toInt
+    math.max(stored.getOrElse(1), bySize)
+  }
+
+  /** Bytes of the table's data files, from a driver-side listing (no
+    * Spark job); 0 for a missing table. Plain `listStatus`, not
+    * `listFiles`: a located status reads each file's permissions, which
+    * on the local filesystem forks a process per file. */
+  private def dataBytes(fs: FileSystem, dir: Path): Long =
+    if (!fs.exists(dir)) 0L
+    else fs.listStatus(dir).iterator.map { st =>
+      val name = st.getPath.getName
+      if (name.startsWith("_") || name.startsWith(".")) 0L
+      else if (st.isDirectory) dataBytes(fs, st.getPath)
+      else st.getLen
+    }.sum
+
+  private def readLayoutMarker(fs: FileSystem, target: Path): Option[Int] = {
     val p = new Path(target, LayoutMarker)
     if (!fs.exists(p)) None
     else {
@@ -94,18 +120,38 @@ object UpsertSink {
     * converges every bucket to the new state. Concurrent readers of the
     * raw directory may transiently miss a mid-rename bucket; single-writer
     * single-reader-after-batch is the supported harness mode.
+    *
+    * Bucket count: a positive `nBuckets` fixes it. The default (0) sizes
+    * it on every call from the stored layout marker and a driver-side
+    * listing of the table's bytes ([[sizedBuckets]]), with
+    * `spark.sql.files.maxPartitionBytes` as the target bytes per bucket,
+    * because a bucket is the unit a reader splits on. A count that
+    * differs from the stored one takes the full-rewrite branch below.
     */
   def mergeBatch(batch: DataFrame, keyCols: Seq[String], versionCol: String,
       path: String, deleteCol: Option[String] = None,
       tiebreakCols: Seq[String] = Nil,
-      nBuckets: Int = DefaultBuckets): Unit = {
+      nBuckets: Int = 0): MergeStats = {
+    require(nBuckets >= 0, s"nBuckets must be >= 0 (0 sizes it), got $nBuckets")
     val spark = batch.sparkSession
+    val target = new Path(path)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // recovery first: the marker and the size below must describe the
+    // table as it stands at the target path
+    val existingRaw: Option[DataFrame] = readKeyedTableRaw(spark, fs, path)
+    val storedBuckets = readLayoutMarker(fs, target)
+    val n =
+      if (nBuckets > 0) nBuckets
+      else sizedBuckets(storedBuckets, dataBytes(fs, target),
+        spark.sessionState.conf.filesMaxPartitionBytes)
     // latest-wins ACROSS batch and existing table: CDC delivery is
     // at-least-once and may replay old events, so an image (or tombstone)
     // only applies if its version is >= what the table already holds.
     // Ties prefer the batch (the result-table use case carries a constant
-    // version and must take the fresh recompute).
-    val w = Window.partitionBy(keyCols.map(col): _*)
+    // version and must take the fresh recompute). The bucket leads the
+    // partition keys (it is a function of the key, so the windows are the
+    // same) so that the shuffle below, by bucket alone, satisfies it.
+    val w = Window.partitionBy((col(BucketCol) +: keyCols.map(col)): _*)
       .orderBy((col(versionCol).desc +: col("_from_batch").desc
         +: tiebreakCols.map(col(_).desc)): _*)
     val delCol = deleteCol.getOrElse("_no_delete")
@@ -113,9 +159,7 @@ object UpsertSink {
       case Some(c) => batch.withColumn(c, coalesce(col(c), lit(false)))
       case None => batch.withColumn(delCol, lit(false))
     }).withColumn("_from_batch", lit(1))
-      .withColumn(BucketCol, bucketOf(keyCols, nBuckets))
-
-    val existingRaw: Option[DataFrame] = readKeyedTableRaw(spark, path)
+      .withColumn(BucketCol, bucketOf(keyCols, n))
 
     // Schema evolution: a batch may ADD columns (upstream DDL change) or
     // arrive WITHOUT columns the table already carries. Widen BOTH sides
@@ -142,16 +186,9 @@ object UpsertSink {
       shape(exDataFields) != shape(batchDataFields)
     val existing =
       if (!schemaChanged) existingRaw
-      else existingRaw.map(ex => addMissing(
-        if (ex.columns.contains(BucketCol)) ex.drop(BucketCol) else ex,
-        batchDataFields))
+      else existingRaw.map(ex => addMissing(dropBucket(ex), batchDataFields))
     val batchTagged =
       if (!schemaChanged) batchTagged0 else addMissing(batchTagged0, exDataFields)
-
-    // Buckets the batch touches — at most nBuckets values, so the driver
-    // collect here is bounded by the layout constant, never by data size.
-    val touched: Seq[Int] = batchTagged.select(BucketCol).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
 
     // A per-bucket merge is only sound when the stored rows were hashed
     // with the SAME bucket count the batch uses: otherwise a key's old
@@ -159,53 +196,41 @@ object UpsertSink {
     // duplicate. The persisted layout marker is authoritative; a bucketed
     // table without one (pre-marker layout) counts as a mismatch and takes
     // the full-rewrite path once, which re-buckets and writes the marker.
-    val fsEarly = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bucketCountMatches =
-      readLayoutMarker(fsEarly, new Path(path)).contains(nBuckets)
-
-    val merged = existing match {
-      case Some(ex) if ex.columns.contains(BucketCol) && bucketCountMatches =>
-        // Partition-pruned read: only touched bucket dirs are scanned.
-        val exTouchedBuckets = ex.where(col(BucketCol).isin(touched: _*))
-        val touchedKeys = batchTagged.select(keyCols.map(col): _*).distinct()
-        val exTouched = exTouchedBuckets.join(touchedKeys, keyCols, "left_semi")
-          .withColumn(delCol, lit(false)).withColumn("_from_batch", lit(0))
-        val winners = exTouched
-          .unionByName(batchTagged.select(exTouched.columns.map(col): _*))
-          .withColumn("_rn", row_number().over(w)).where(col("_rn") === 1)
-          .where(!col(delCol)).drop("_rn", delCol, "_from_batch")
-        // Bucket-resident keys NOT in the batch ride along unchanged —
-        // the bucket is the rewrite unit.
-        exTouchedBuckets.join(touchedKeys, keyCols, "left_anti")
-          .unionByName(winners)
-      case Some(exRaw) =>
-        // Layout migration: a pre-bucketing flat table, OR a bucketed
-        // table whose stored bucket count differs from this call's
-        // nBuckets — merge the old way and rewrite everything once into
-        // the (re-)bucketed layout.
-        val ex = if (exRaw.columns.contains(BucketCol)) exRaw.drop(BucketCol) else exRaw
-        val touchedKeys = batchTagged.select(keyCols.map(col): _*).distinct()
-        val exTouched = ex.join(touchedKeys, keyCols, "left_semi")
-          .withColumn(delCol, lit(false)).withColumn("_from_batch", lit(0))
-          .withColumn(BucketCol, bucketOf(keyCols, nBuckets))
-        val winners = exTouched
-          .unionByName(batchTagged.select(exTouched.columns.map(col): _*))
-          .withColumn("_rn", row_number().over(w)).where(col("_rn") === 1)
-          .where(!col(delCol)).drop("_rn", delCol, "_from_batch")
-        ex.join(touchedKeys, keyCols, "left_anti")
-          .withColumn(BucketCol, bucketOf(keyCols, nBuckets))
-          .unionByName(winners)
-      case None =>
-        batchTagged
-          .withColumn("_rn", row_number().over(w)).where(col("_rn") === 1)
-          .where(!col(delCol)).drop("_rn", delCol, "_from_batch")
-    }
-
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = new Path(path)
     val isBucketedMerge =
-      existing.exists(_.columns.contains(BucketCol)) && bucketCountMatches
+      existing.exists(_.columns.contains(BucketCol)) && storedBuckets.contains(n)
     val fullRewrite = !isBucketedMerge // fresh table, migration, or re-bucket
+
+    // Buckets the batch touches — at most n values, so the driver collect
+    // here is bounded by the bucket count, never by the batch's size. A
+    // full rewrite swaps the whole table and needs none.
+    val touched: Seq[Int] =
+      if (fullRewrite) Nil
+      else batchTagged.select(BucketCol).distinct()
+        .collect().map(_.getInt(0)).toSeq.sorted
+
+    // The stored rows this merge rewrites: the touched buckets (a
+    // partition-pruned read; the bucket is the rewrite unit), or the whole
+    // table, re-hashed into the new layout after the union (so both sides
+    // hash the key at its widened type) on a full rewrite. They meet the
+    // batch in ONE window per key: the latest-wins winner stays unless it
+    // is a tombstone, and a stored key the batch does not name is alone in
+    // its window, so it rides along unchanged. One shuffle, by bucket, into
+    // one partition per written bucket: each bucket is written by one task
+    // as one file, the same unit a reader splits on. (A batch far larger
+    // than its table, such as a bulk first load, is written by as few
+    // tasks; the next merge re-buckets it to its size.)
+    val stored = existing.map { ex =>
+      (if (isBucketedMerge) ex.where(col(BucketCol).isin(touched: _*)) else dropBucket(ex))
+        .withColumn(delCol, lit(false)).withColumn("_from_batch", lit(0))
+    }
+    val merged = stored
+      .fold(batchTagged) { ex =>
+        val both = ex.unionByName(batchTagged.select(ex.columns.map(col): _*))
+        if (isBucketedMerge) both else both.withColumn(BucketCol, bucketOf(keyCols, n))
+      }
+      .repartition(math.max(1, if (fullRewrite) n else touched.size), col(BucketCol))
+      .withColumn("_rn", row_number().over(w)).where(col("_rn") === 1)
+      .where(!col(delCol)).drop("_rn", delCol, "_from_batch")
 
     val tmp = new Path(path + ".tmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)
@@ -223,7 +248,7 @@ object UpsertSink {
       if (fs.exists(bak)) fs.delete(bak, true)
       if (fs.exists(target)) fs.rename(target, bak)
       fs.rename(tmp, target)
-      writeLayoutMarker(fs, target, nBuckets)
+      writeLayoutMarker(fs, target, n)
       if (fs.exists(bak)) fs.delete(bak, true)
     } else {
       // Per-bucket swap: park old buckets in .bak, move new ones in.
@@ -243,6 +268,7 @@ object UpsertSink {
       fs.delete(bakRoot, true)
       fs.delete(tmp, true)
     }
+    MergeStats(n, if (fullRewrite) n else touched.size, fullRewrite)
   }
 
   /** Read a keyed table written by [[mergeBatch]] (bucket column hidden).
@@ -336,7 +362,7 @@ object UpsertSink {
   private def dropBucket(df: DataFrame): DataFrame =
     if (df.columns.contains(BucketCol)) df.drop(BucketCol) else df
 
-  private def hasData(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Boolean =
+  private def hasData(fs: FileSystem, dir: Path): Boolean =
     fs.exists(dir) && fs.listStatus(dir).exists(s =>
       !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
 
@@ -344,8 +370,8 @@ object UpsertSink {
     * swap first: any bucket parked in `.bak` whose target dir is missing
     * is restored (safe — the interrupted micro-batch replays and the
     * version-gated merge converges it forward). */
-  private def readKeyedTableRaw(spark: SparkSession, path: String): Option[DataFrame] = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def readKeyedTableRaw(spark: SparkSession, fs: FileSystem,
+      path: String): Option[DataFrame] = {
     val target = new Path(path)
     val bakRoot = new Path(path + ".bak")
     // Recovery first, so every later read (and the next merge) sees a
@@ -375,10 +401,7 @@ object UpsertSink {
         fs.delete(bakRoot, true)
       }
     }
-    if (fs.exists(target) && fs.listStatus(target).exists(s =>
-        !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")))
-      Some(spark.read.parquet(path))
-    else None
+    if (hasData(fs, target)) Some(spark.read.parquet(path)) else None
   }
 
   /** Attach the upsert sink to a streaming changelog. */
@@ -390,6 +413,7 @@ object UpsertSink {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         mergeBatch(batch, keyCols, versionCol, path, deleteCol)
+        ()
       }
       .trigger(Trigger.AvailableNow())
       .start()

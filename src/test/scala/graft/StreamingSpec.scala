@@ -119,7 +119,7 @@ class StreamingSpec extends SparkSpec {
     val dir = Files.createTempDirectory("bucketed").toString + "/table"
     UpsertSink.mergeBatch(
       spark.range(1000).selectExpr("CAST(id AS INT) AS id", "concat('v', id) AS v", "id AS ver"),
-      Seq("id"), "ver", dir)
+      Seq("id"), "ver", dir, nBuckets = 8)
     def snapshot(): Map[String, String] =
       JFiles.walk(JPaths.get(dir)).iterator().asScala
         .filter(p => JFiles.isRegularFile(p) && p.toString.endsWith(".parquet"))
@@ -131,7 +131,7 @@ class StreamingSpec extends SparkSpec {
     assert(before.keys.map(_.split("/").init.last).toSet.size > 1,
       "table should span multiple bucket dirs")
     UpsertSink.mergeBatch(Seq((5, "V5NEW", 5000L)).toDF("id", "v", "ver"),
-      Seq("id"), "ver", dir)
+      Seq("id"), "ver", dir, nBuckets = 8)
     val after = snapshot()
     // exactly one bucket dir changed; every surviving file outside it is
     // byte-identical (same path, same md5)
@@ -150,7 +150,7 @@ class StreamingSpec extends SparkSpec {
     val dir = Files.createTempDirectory("bucketrec").toString + "/table"
     UpsertSink.mergeBatch(
       spark.range(100).selectExpr("CAST(id AS INT) AS id", "concat('v', id) AS v", "id AS ver"),
-      Seq("id"), "ver", dir)
+      Seq("id"), "ver", dir, nBuckets = 8)
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // simulate a crash between rename(target->bak) and rename(tmp->target)
     // for one bucket: park it in .bak and remove it from the table
@@ -165,7 +165,7 @@ class StreamingSpec extends SparkSpec {
     assert(fs.exists(new Path(dir + ".bak")), "read must not mutate the layout")
     // the next merge (the single writer) performs the actual recovery
     UpsertSink.mergeBatch(Seq((1, "v1x", 5000L)).toDF("id", "v", "ver"),
-      Seq("id"), "ver", dir)
+      Seq("id"), "ver", dir, nBuckets = 8)
     assert(!fs.exists(new Path(dir + ".bak")))
     assert(UpsertSink.readKeyedTable(spark, dir).get.count() == 100)
   }
@@ -224,6 +224,23 @@ class StreamingSpec extends SparkSpec {
     assert(got == Map(1 -> 10L, 2 -> 20L))
   }
 
+  test("upsert schema evolution: a KEY type change re-buckets stored and batch rows alike") {
+    import spark.implicits._
+    // the key widens int -> long: the stored image of key 5 and the batch's
+    // must hash to the same bucket, or both survive the rewrite
+    val dir = Files.createTempDirectory("upsert_kevo").toString + "/t"
+    UpsertSink.mergeBatch(
+      spark.range(100).selectExpr("CAST(id AS INT) AS id", "concat('v', id) AS v", "id AS ver"),
+      Seq("id"), "ver", dir, nBuckets = 8)
+    val stats = UpsertSink.mergeBatch(Seq((5L, "V5NEW", 5000L)).toDF("id", "v", "ver"),
+      Seq("id"), "ver", dir, nBuckets = 8)
+    assert(stats.fullRewrite)
+    val got = spark.read.parquet(dir).select("id", "v")
+      .collect().map(r => r.getLong(0) -> r.getString(1))
+    assert(got.length == 100, s"expected 100 unique keys, got ${got.length}")
+    assert(got.toMap.apply(5L) == "V5NEW")
+  }
+
   test("nBuckets change routes through a full rewrite; no stale duplicate keys") {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
@@ -243,6 +260,137 @@ class StreamingSpec extends SparkSpec {
     val bucketIds = fs.listStatus(new Path(dir)).map(_.getPath.getName)
       .filter(_.startsWith("graft_bucket=")).map(_.stripPrefix("graft_bucket=").toInt)
     assert(bucketIds.forall(_ < 8), "table must be re-bucketed to the new count")
+  }
+
+  /** The keyed table's bucket dirs and its layout marker. */
+  private def layout(dir: String): (Seq[Int], Option[String]) = {
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val ids = fs.listStatus(new Path(dir)).map(_.getPath.getName)
+      .filter(_.startsWith("graft_bucket=")).map(_.stripPrefix("graft_bucket=").toInt)
+      .toSeq.sorted
+    val marker = new Path(dir, "_graft_nbuckets")
+    val stored = if (!fs.exists(marker)) None else {
+      val in = fs.open(marker)
+      try Some(new String(in.readAllBytes(), "UTF-8").trim) finally in.close()
+    }
+    (ids, stored)
+  }
+
+  test("bucket sizing rule: one split per bucket, powers of two, never below the stored count") {
+    val split = 1000L
+    assert(UpsertSink.sizedBuckets(None, 0L, split) == 1)
+    assert(UpsertSink.sizedBuckets(None, split, split) == 1)
+    assert(UpsertSink.sizedBuckets(None, split + 1, split) == 2)
+    assert(UpsertSink.sizedBuckets(None, 3 * split, split) == 4)
+    assert(UpsertSink.sizedBuckets(None, 4 * split, split) == 4)
+    assert(UpsertSink.sizedBuckets(None, 4 * split + 1, split) == 8)
+    assert(UpsertSink.sizedBuckets(Some(2), 5 * split, split) == 8)
+    assert(UpsertSink.sizedBuckets(Some(64), 10L, split) == 64)
+  }
+
+  test("a fresh small table gets one bucket and layout marker 1") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("sized_fresh").toString + "/table"
+    val stats = UpsertSink.mergeBatch(
+      spark.range(300).selectExpr("CAST(id AS INT) AS id", "concat('v', id) AS v", "id AS ver"),
+      Seq("id"), "ver", dir)
+    assert(stats == UpsertSink.MergeStats(buckets = 1, bucketsRewritten = 1, fullRewrite = true))
+    assert(layout(dir) == (Seq(0), Some("1")))
+    // a small merge into it stays a one-bucket, in-place merge
+    val next = UpsertSink.mergeBatch(Seq((5, "V5NEW", 5000L)).toDF("id", "v", "ver"),
+      Seq("id"), "ver", dir)
+    assert(next == UpsertSink.MergeStats(1, 1, fullRewrite = false))
+    val got = spark.read.parquet(dir).select("id", "v")
+      .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+    assert(got.size == 300 && got(5) == "V5NEW" && got(6) == "v6")
+  }
+
+  test("a growing table re-buckets 1 -> 2 -> 4 through full rewrites; latest wins, tombstones hold") {
+    import spark.implicits._
+    import java.nio.file.{Files => JFiles, Paths => JPaths}
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("sized_grow").toString + "/table"
+    val conf = "spark.sql.files.maxPartitionBytes"
+    val prior = spark.conf.getOption(conf)
+    val split = 16 * 1024L
+    // the bytes the sizing rule reads: the table's data files
+    def tableBytes(): Long =
+      if (!JFiles.exists(JPaths.get(dir))) 0L
+      else JFiles.walk(JPaths.get(dir)).iterator().asScala
+        .filter(p => JFiles.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
+        .map(JFiles.size(_)).sum
+    var model = Map.empty[Int, (String, Long)]
+    val seen = scala.collection.mutable.ArrayBuffer.empty[UpsertSink.MergeStats]
+    spark.conf.set(conf, split.toString)
+    try {
+      var round = 0
+      while ((seen.isEmpty || seen.last.buckets < 4) && round < 12) {
+        val ver = 100L * (round + 1)
+        // 300 new keys with incompressible payloads, so the table grows
+        val fresh = (round * 300 until (round + 1) * 300).map(k =>
+          (k, java.util.UUID.nameUUIDFromBytes(s"$k/$round".getBytes).toString, ver, false))
+        // an update and a tombstone for older keys, plus a stale replay
+        val old = if (round == 0) Nil else Seq(
+          (round * 7, s"upd$round", ver, false),
+          (round * 7 + 1, "gone", ver, true),
+          (round * 7 + 2, "stale", 1L, false))
+        val batch = fresh ++ old
+        val before = tableBytes()
+        val prevBuckets = seen.lastOption.map(_.buckets)
+        val stats = UpsertSink.mergeBatch(batch.toDF("id", "v", "ver", "del"),
+          Seq("id"), "ver", dir, deleteCol = Some("del"))
+        seen += stats
+        batch.foreach { case (k, v, ve, del) =>
+          if (model.get(k).forall(_._2 <= ve)) model = if (del) model - k else model + (k -> (v, ve))
+        }
+        val expected = UpsertSink.sizedBuckets(prevBuckets, before, split)
+        assert(stats.buckets == expected, s"round $round: $stats for $before bytes")
+        assert(stats.fullRewrite == !prevBuckets.contains(stats.buckets),
+          s"round $round: a count change must take the full rewrite, and only it: $stats")
+        val (ids, marker) = layout(dir)
+        assert(marker.contains(stats.buckets.toString) && ids.forall(_ < stats.buckets),
+          s"round $round: layout $ids / $marker against $stats")
+        val got = UpsertSink.readKeyedTable(spark, dir).get.select("id", "v", "ver")
+          .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
+        assert(got.length == got.map(_._1).distinct.length, s"round $round: duplicate keys")
+        assert(got.map(r => r._1 -> (r._2, r._3)).toMap == model, s"round $round: table != model")
+        round += 1
+      }
+    } finally prior match {
+      case Some(v) => spark.conf.set(conf, v)
+      case None => spark.conf.unset(conf)
+    }
+    val counts = seen.map(_.buckets)
+    assert(counts.distinct == Seq(1, 2, 4), s"bucket counts per merge: $counts")
+    assert(seen.count(_.fullRewrite) == 3, s"one full rewrite per count: $seen")
+    assert(model.contains(7) && model(7)._1 == "upd1" && !model.contains(8) && model(9)._2 != 1L)
+  }
+
+  test("an existing bucket count is kept: no shrinking and no migration for a small merge") {
+    import spark.implicits._
+    for (n <- Seq(64, 8)) {
+      val dir = Files.createTempDirectory(s"sized_keep$n").toString + "/table"
+      UpsertSink.mergeBatch(
+        spark.range(100).selectExpr("CAST(id AS INT) AS id", "concat('v', id) AS v",
+          "id AS ver", "false AS del"),
+        Seq("id"), "ver", dir, deleteCol = Some("del"), nBuckets = n)
+      val (idsBefore, _) = layout(dir)
+      // delete most keys: the table shrinks, its bucket count does not
+      val stats = UpsertSink.mergeBatch(
+        (0 until 90).map(k => (k, "gone", 1000L, true)).toDF("id", "v", "ver", "del"),
+        Seq("id"), "ver", dir, deleteCol = Some("del"))
+      assert(stats.buckets == n && !stats.fullRewrite, s"n=$n: $stats")
+      assert(stats.bucketsRewritten <= idsBefore.size, s"n=$n: $stats")
+      val (ids, marker) = layout(dir)
+      assert(marker.contains(n.toString) && ids.forall(idsBefore.contains), s"n=$n: $ids")
+      val small = UpsertSink.mergeBatch(Seq((95, "V95NEW", 2000L, false)).toDF("id", "v", "ver", "del"),
+        Seq("id"), "ver", dir, deleteCol = Some("del"))
+      assert(small == UpsertSink.MergeStats(n, 1, fullRewrite = false), s"n=$n: $small")
+      val got = spark.read.parquet(dir).select("id", "v")
+        .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+      assert(got == (90 until 100).map(k => k -> (if (k == 95) "V95NEW" else s"v$k")).toMap)
+    }
   }
 
   test("crashed full rewrite: old-layout park is restored or discarded, never merged") {
@@ -287,7 +435,7 @@ class StreamingSpec extends SparkSpec {
     val dir = Files.createTempDirectory("midswap").toString + "/table"
     UpsertSink.mergeBatch(
       spark.range(200).selectExpr("CAST(id AS INT) AS id", "concat('v', id) AS v", "id AS ver"),
-      Seq("id"), "ver", dir)
+      Seq("id"), "ver", dir, nBuckets = 8)
     val parked = new java.util.concurrent.CountDownLatch(1)
     val release = new java.util.concurrent.CountDownLatch(1)
     UpsertSink.midSwapPause = () => {
@@ -296,7 +444,7 @@ class StreamingSpec extends SparkSpec {
     }
     val writer = new Thread(() =>
       UpsertSink.mergeBatch(Seq((7, "V7NEW", 999L)).toDF("id", "v", "ver"),
-        Seq("id"), "ver", dir))
+        Seq("id"), "ver", dir, nBuckets = 8))
     try {
       writer.start()
       assert(parked.await(30, java.util.concurrent.TimeUnit.SECONDS))
@@ -521,6 +669,7 @@ class StreamingSpec extends SparkSpec {
           graft.streaming.UpsertSink.mergeBatch(
             agg.withColumn("_v", lit(0L)), Seq("order_id"), "_v", dir + "/result")
         }
+        ()
       }
       .trigger(Trigger.AvailableNow())
       .start()
@@ -808,6 +957,7 @@ class StreamingSpec extends SparkSpec {
           val b = batch.localCheckpoint() // materialize once for both actions
           seen.addAndGet(b.count())
           UpsertSink.mergeBatch(b, Seq("id"), "_tx_id", dir + "/table")
+          ()
         }
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination() // AvailableNow: terminates once caught up
@@ -974,6 +1124,7 @@ class StreamingSpec extends SparkSpec {
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         UpsertSink.mergeBatch(batch.withColumn("_del", col("_op") === "d"),
           Seq("id"), "_tx_id", dir, deleteCol = Some("_del"))
+        ()
       }.start()
     try {
       // txn 100 complete (both events + boundary); txn 101 half-read
@@ -1146,6 +1297,7 @@ class StreamingSpec extends SparkSpec {
       .option("checkpointLocation", Files.createTempDirectory("graft_ingest_ckpt").toString)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         UpsertSink.mergeBatch(batch, Seq("content_hash"), "version", dir)
+        ()
       }
       .start()
     try {

@@ -633,6 +633,7 @@ class TwinReplaySpec extends SparkSpec {
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         graft.streaming.UpsertSink.mergeBatch(batch, Seq("user_id"), "ver_us",
           dir, tiebreakCols = Seq("event_id"), nBuckets = 8)
+        ()
       }
       .start()
     try {
@@ -683,6 +684,7 @@ class TwinReplaySpec extends SparkSpec {
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
           graft.streaming.UpsertSink.mergeBatch(b, Seq("user_id"), "ver_us",
             table, tiebreakCols = Seq("event_id"), nBuckets = 8)
+          ()
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       q.awaitTermination()

@@ -15,7 +15,9 @@ Prints, for each pair, both sides' values of every reported metric; then per
 side the median and Q1/Q3 of each metric, B's wins out of the pairs (by the
 metric's `better` direction in BENCHMARK.json), and the failed ops. By
 default the metrics are the end-to-end ones; with --trace 1 the run reports
-per-layer metrics, so name them with --metric.
+per-layer metrics, so name them with --metric. Every `pizzabench: failed op:`
+line a run writes to stderr is echoed, tagged with its side and seed, so a
+drain past the budget can be told from a wrong result table.
 """
 import argparse
 import json
@@ -27,12 +29,15 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def run_once(checkout, command, workload, seed, seconds, trace):
+def run_once(side, checkout, command, workload, seed, seconds, trace):
     """One benchmark run; returns its JSON result, or None if it produced none."""
     cmd = command + ["--workload", workload, "--seed", str(seed),
                      "--seconds", str(seconds), "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=checkout, stdin=subprocess.DEVNULL,
                        stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
+    for line in p.stderr.splitlines():
+        if line.startswith("pizzabench: failed op:"):
+            print("  %s seed %d: %s" % (side, seed, line), flush=True)
     lines = p.stdout.strip().splitlines()
     try:
         return json.loads(lines[-1])
@@ -84,7 +89,7 @@ def main():
         order = ("A", "B") if i % 2 == 0 else ("B", "A")
         got = {}
         for s in order:
-            got[s] = run_once(sides[s], bench["command"], a.workload, seed,
+            got[s] = run_once(s, sides[s], bench["command"], a.workload, seed,
                               bench["run_seconds"], a.trace)
         for s in sides:
             if got[s] is None:
