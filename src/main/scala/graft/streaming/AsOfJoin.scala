@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.slf4j.LoggerFactory
 import graft.expressions.RowCodec
 
 /** Event-time temporal (as-of) join over changelog dimensions — the
@@ -33,6 +34,18 @@ import graft.expressions.RowCodec
   *   against retained history — rather than silently dropping.
   * - Works in batch mode too (no watermark ⇒ everything flushes),
   *   which is how the DuckDB ASOF-join oracle checks it.
+  * - Bounded map-side fan-out (streaming only): a source's micro-batch
+  *   arrives as one partition per block it received (a MemoryStream adds
+  *   one per `addData`), so a hop's input stage would run one task per
+  *   block, and task launch, not the few hundred rows, would set the
+  *   micro-batch's time. Each tagged side is coalesced to at most
+  *   `defaultParallelism` partitions (the tasks the session runs at
+  *   once, so no parallelism is lost) before the union. Each side on its
+  *   own, not the union: the probe of a chained hop is the previous hop's
+  *   stateful output, and a union-wide coalesce over partitions with no
+  *   known location groups them by index, which can run several of that
+  *   operator's state partitions in one task. A side that already has
+  *   that many partitions or fewer is left as it is.
   *
   * Chaining (scenario 6 runs FOUR of these back to back,
   * 06-flink-cdc-temporal-join.json:30): use [[joinDataFramesWide]] per
@@ -56,6 +69,8 @@ object AsOfJoin {
     * state wakes up this many ms past the watermark to prune superseded
     * versions even if the key never sees another event. */
   private val IdleGcIntervalMs = 60000L
+
+  private val log = LoggerFactory.getLogger(getClass)
 
   /** One tagged input row: join key, event time (this column carries the
     * stream's watermark — do not project it away before the stateful op),
@@ -104,8 +119,8 @@ object AsOfJoin {
     // the explicit flag, not Try — some Spark versions report watermark
     // 0 rather than throwing in batch).
     val (wm, wmMs) = EventTimeOps.watermarkMicros(streaming, state)
-    if (sys.env.contains("GRAFT_ASOF_DEBUG"))
-      System.err.println(s"[asof] key=$key wm=$wm timedOut=${state.hasTimedOut} hasState=${state.exists}")
+    if (log.isDebugEnabled)
+      log.debug(s"key=$key wm=$wm timedOut=${state.hasTimedOut} hasState=${state.exists}")
     val prev = state.getOption.getOrElse(AsOfState(Nil, Nil))
     val (newBuilds, newProbes) = rows.toList.partition(!_.isProbe)
     val st = AsOfState(
@@ -185,15 +200,22 @@ object AsOfJoin {
 
   /** Convenience: full as-of join of two DataFrames on a key + event-time
     * column. `delay` is the watermark for streaming inputs (ignored for
-    * batch). Output: key, probe/build event times (µs) + binary payloads. */
+    * batch). Output: key, probe/build event times (µs) + binary payloads.
+    * Streaming inputs have each side's partitions bounded first (see the
+    * object doc); the batch form is planned as given. */
   def joinDataFrames(probe: DataFrame, build: DataFrame, keyCol: String,
       tsCol: String, delay: String = "0 seconds"): Dataset[AsOfJoined] = {
     val spark = probe.sparkSession
     import spark.implicits._
-    val tagged = tag(build, keyCol, tsCol, isProbe = false)
-      .unionByName(tag(probe, keyCol, tsCol, isProbe = true))
+    val streaming = probe.isStreaming || build.isStreaming
+    val slots = spark.sparkContext.defaultParallelism
+    def side(df: DataFrame, isProbe: Boolean): DataFrame = {
+      val t = tag(df, keyCol, tsCol, isProbe)
+      if (streaming) t.coalesce(slots) else t
+    }
+    val tagged = side(build, isProbe = false).unionByName(side(probe, isProbe = true))
     val withWm =
-      if (tagged.isStreaming) tagged.withWatermark("eventTime", delay) else tagged
+      if (streaming) tagged.withWatermark("eventTime", delay) else tagged
     join(withWm.as[AsOfEvent])
   }
 }

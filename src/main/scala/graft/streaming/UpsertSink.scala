@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.Row
 
 /** Keyed upsert sink — the engine's equivalent of Flink's upsert-kafka
@@ -23,6 +24,13 @@ import org.apache.spark.sql.Row
   * Kafka topic (append with key bytes; compaction collapses) or a
   * MERGE-capable table format — the per-batch dedup (latest image per
   * key) is the part that must be correct either way.
+  *
+  * The table root also holds the sink's own schema file (`_graft_schema`,
+  * the data columns as Spark's JSON schema), written by every whole-table
+  * rewrite, the only path that can change the schema. A merge opens the
+  * table with it instead of inferring the schema with a footer-reading
+  * Spark job; a table without the file (one not written by this sink, or
+  * one whose file was removed) is inferred as before.
   */
 object UpsertSink {
 
@@ -45,13 +53,34 @@ object UpsertSink {
     * reader and the data-presence check both ignore it. */
   private val LayoutMarker = "_graft_nbuckets"
 
+  /** Schema file at the table root: the data columns' schema as JSON.
+    * Underscore-prefixed for the same reason as the layout marker. */
+  private val SchemaFile = "_graft_schema"
+
   private def bucketOf(keyCols: Seq[String], n: Int) =
     pmod(hash(keyCols.map(col): _*), lit(n))
 
-  private def writeLayoutMarker(fs: FileSystem, target: Path, n: Int): Unit = {
-    val out = fs.create(new Path(target, LayoutMarker), true)
-    try out.write(n.toString.getBytes("UTF-8")) finally out.close()
+  private def writeSmallFile(fs: FileSystem, file: Path, content: String): Unit = {
+    val out = fs.create(file, true)
+    try out.write(content.getBytes("UTF-8")) finally out.close()
   }
+
+  /** The whole file as text, or None if it is missing. Reads to EOF: a
+    * single read() may return short on non-local filesystems, and a
+    * truncated bucket count would misparse (silently forcing a full-table
+    * rewrite on every merge). */
+  private def readSmallFile(fs: FileSystem, file: Path): Option[String] =
+    if (!fs.exists(file)) None
+    else {
+      val in = fs.open(file)
+      try {
+        val buf = new java.io.ByteArrayOutputStream()
+        val bytes = new Array[Byte](4096)
+        var n = in.read(bytes)
+        while (n > 0) { buf.write(bytes, 0, n); n = in.read(bytes) }
+        Some(new String(buf.toByteArray, "UTF-8"))
+      } finally in.close()
+    }
 
   /** Bucket count for a merge when the caller names none: the stored
     * count, grown to the smallest power of two that gives each bucket at
@@ -79,23 +108,14 @@ object UpsertSink {
       else st.getLen
     }.sum
 
-  private def readLayoutMarker(fs: FileSystem, target: Path): Option[Int] = {
-    val p = new Path(target, LayoutMarker)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        // read to EOF: a single read() may return short on non-local
-        // filesystems, and truncated digits would misparse the bucket
-        // count (silently forcing a full-table rewrite on every merge)
-        val buf = new java.io.ByteArrayOutputStream()
-        val bytes = new Array[Byte](32)
-        var n = in.read(bytes)
-        while (n > 0) { buf.write(bytes, 0, n); n = in.read(bytes) }
-        new String(buf.toByteArray, "UTF-8").trim.toIntOption
-      } finally in.close()
-    }
-  }
+  private def readLayoutMarker(fs: FileSystem, target: Path): Option[Int] =
+    readSmallFile(fs, new Path(target, LayoutMarker)).flatMap(_.trim.toIntOption)
+
+  /** The stored schema of the data columns; None when the file is
+    * missing, and the caller infers it instead. */
+  private def readSchemaFile(fs: FileSystem, target: Path): Option[StructType] =
+    readSmallFile(fs, new Path(target, SchemaFile))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
 
   /** Hook for tests: invoked between a bucket's rename-out and rename-in
     * during the per-bucket swap, so a concurrent-reader test can observe
@@ -119,7 +139,15 @@ object UpsertSink {
     * and the version-gated latest-wins merge is idempotent, so the retry
     * converges every bucket to the new state. Concurrent readers of the
     * raw directory may transiently miss a mid-rename bucket; single-writer
-    * single-reader-after-batch is the supported harness mode.
+    * single-reader-after-batch is the supported harness mode. The schema
+    * file is written into the staged table before its commit rename, so
+    * a crash leaves the committed table with its own schema file (or, for
+    * a restored park, the park's), never another table's.
+    *
+    * Side jobs: the table is opened with its schema file (no inference
+    * job), and a one-bucket table's touched bucket is 0 without a job
+    * (an empty batch then rewrites bucket 0 unchanged). So a merge into a
+    * small table runs its write job and nothing else.
     *
     * Bucket count: a positive `nBuckets` fixes it. The default (0) sizes
     * it on every call from the stored layout marker and a driver-side
@@ -202,9 +230,11 @@ object UpsertSink {
 
     // Buckets the batch touches — at most n values, so the driver collect
     // here is bounded by the bucket count, never by the batch's size. A
-    // full rewrite swaps the whole table and needs none.
+    // full rewrite swaps the whole table and needs none; a one-bucket
+    // table needs no job to know it.
     val touched: Seq[Int] =
       if (fullRewrite) Nil
+      else if (n == 1) Seq(0)
       else batchTagged.select(BucketCol).distinct()
         .collect().map(_.getInt(0)).toSeq.sorted
 
@@ -237,6 +267,10 @@ object UpsertSink {
     merged.write.mode("overwrite").partitionBy(BucketCol).parquet(tmp.toString)
 
     if (fullRewrite) {
+      // The schema file goes in with the data, so the commit rename below
+      // publishes both or neither: a table never holds a stale one.
+      writeSmallFile(fs, new Path(tmp, SchemaFile),
+        StructType(merged.schema.filterNot(_.name == BucketCol)).json)
       // Whole-table swap (first write / migration / re-bucket): same
       // protocol with the entire table as the single swap unit — parked
       // under the DISTINCT `.bak.full` name, because its bucket dirs
@@ -248,7 +282,7 @@ object UpsertSink {
       if (fs.exists(bak)) fs.delete(bak, true)
       if (fs.exists(target)) fs.rename(target, bak)
       fs.rename(tmp, target)
-      writeLayoutMarker(fs, target, n)
+      writeSmallFile(fs, new Path(target, LayoutMarker), n.toString)
       if (fs.exists(bak)) fs.delete(bak, true)
     } else {
       // Per-bucket swap: park old buckets in .bak, move new ones in.
@@ -401,7 +435,8 @@ object UpsertSink {
         fs.delete(bakRoot, true)
       }
     }
-    if (hasData(fs, target)) Some(spark.read.parquet(path)) else None
+    if (!hasData(fs, target)) None
+    else Some(readSchemaFile(fs, target).fold(spark.read)(spark.read.schema).parquet(path))
   }
 
   /** Attach the upsert sink to a streaming changelog. */

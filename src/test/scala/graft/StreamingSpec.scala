@@ -393,6 +393,92 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  /** Merges `rows` into the keyed table at `dir` as a stream's
+    * micro-batch would: with AQE off (a streaming query's session turns it
+    * off) and from a batch whose row count the optimizer cannot see (it is
+    * read back from files; a local one-row batch lets the optimizer drop
+    * the touched-bucket aggregate). Returns the stats and the jobs the
+    * merge submitted. */
+  private def microBatchMerge(rows: org.apache.spark.sql.DataFrame,
+      dir: String): (UpsertSink.MergeStats, Int) = {
+    val staged = Files.createTempDirectory("micro_batch").toString + "/batch"
+    rows.write.parquet(staged)
+    val batch = spark.read.parquet(staged)
+    val key = "spark.sql.adaptive.enabled"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val (stats, seen) = scheduled(UpsertSink.mergeBatch(batch, Seq("id"), "ver", dir))
+      (stats, seen.jobs)
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** Jobs such a merge into a one-bucket table submits: the write alone.
+    * The sink used to add two: a footer-reading schema inference on
+    * opening the table and the touched-bucket collect. */
+  private val OneBucketMergeJobs = 1
+
+  test("a one-row merge into a one-bucket table submits only its write job") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("merge_jobs").toString + "/table"
+    UpsertSink.mergeBatch(
+      spark.range(100).selectExpr("CAST(id AS INT) AS id", "concat('v', id) AS v", "id AS ver"),
+      Seq("id"), "ver", dir)
+    val (stats, jobs) = microBatchMerge(Seq((5, "V5NEW", 5000L)).toDF("id", "v", "ver"), dir)
+    assert(stats == UpsertSink.MergeStats(1, 1, fullRewrite = false))
+    assert(jobs == OneBucketMergeJobs, s"jobs submitted: $jobs")
+    val got = spark.read.parquet(dir).select("id", "v")
+      .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+    assert(got.size == 100 && got(5) == "V5NEW" && got(6) == "v6")
+  }
+
+  test("a merge reads the schema a full rewrite stored; without the file it infers it") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    val dir = Files.createTempDirectory("schema_file").toString + "/table"
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val schemaFile = new Path(dir, "_graft_schema")
+    def stored(): StructType = {
+      val in = fs.open(schemaFile)
+      try DataType.fromJson(new String(in.readAllBytes(), "UTF-8")).asInstanceOf[StructType]
+      finally in.close()
+    }
+    def shape(st: StructType) = st.fields.map(f => f.name -> f.dataType).toSeq
+    def table() = spark.read.parquet(dir).select("id", "v", "note")
+      .collect().map(r => r.getInt(0) -> (r.getString(1), Option(r.getString(2)))).toMap
+    UpsertSink.mergeBatch(
+      spark.range(50).selectExpr("CAST(id AS INT) AS id", "concat('v', id) AS v", "id AS ver"),
+      Seq("id"), "ver", dir)
+    assert(shape(stored()) == Seq("id" -> IntegerType, "v" -> StringType, "ver" -> LongType))
+    // an added column: a schema-changing full rewrite stores the new schema
+    val widened = UpsertSink.mergeBatch(
+      Seq((7, "V7NEW", 700L, "hot")).toDF("id", "v", "ver", "note"), Seq("id"), "ver", dir)
+    assert(widened == UpsertSink.MergeStats(1, 1, fullRewrite = true))
+    assert(shape(stored()) == shape(spark.read.parquet(dir).drop("graft_bucket").schema),
+      "the stored schema is the one inference reads from the files")
+    assert(stored().fieldNames.toSeq == Seq("id", "v", "ver", "note"))
+    // the next merge opens the table with the stored schema: no inference
+    // job, and it sees the note column, so the batch's schema matches and
+    // the merge stays per bucket (a stale file would force a full rewrite)
+    val (next, jobs) = microBatchMerge(
+      Seq((8, "V8NEW", 800L, "cold")).toDF("id", "v", "ver", "note"), dir)
+    assert(next == UpsertSink.MergeStats(1, 1, fullRewrite = false))
+    assert(jobs == OneBucketMergeJobs, s"jobs submitted: $jobs")
+    val want = (0 until 50).map(k => k -> (s"v$k", Option.empty[String])).toMap ++
+      Map(7 -> ("V7NEW", Some("hot")), 8 -> ("V8NEW", Some("cold")))
+    assert(table() == want)
+    // a table without the file is opened by inference, one job more
+    assert(fs.delete(schemaFile, false) && !fs.exists(schemaFile))
+    val (inferred, inferredJobs) = microBatchMerge(
+      Seq((9, "V9NEW", 900L, "warm")).toDF("id", "v", "ver", "note"), dir)
+    assert(inferred == UpsertSink.MergeStats(1, 1, fullRewrite = false))
+    assert(inferredJobs == OneBucketMergeJobs + 1, s"jobs submitted: $inferredJobs")
+    assert(table() == want + (9 -> ("V9NEW", Some("warm"))))
+  }
+
   test("crashed full rewrite: old-layout park is restored or discarded, never merged") {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
@@ -688,6 +774,46 @@ class StreamingSpec extends SparkSpec {
     // order@5000 sees price 8 (version@1000), duplicates preserved
     assert(got.head.getString(2) ==
       """[{"pizza":"Master Splinter","price":8},{"pizza":"Master Splinter","price":8}]""")
+  }
+
+  test("streaming as-of join: many source blocks run in a bounded number of tasks, same rows as batch") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val slots = spark.sparkContext.defaultParallelism
+    val probes = MemoryStream[(Int, String, Long)] // key, tag, tsMs
+    val builds = MemoryStream[(Int, Int, Long)] // key, price, tsMs
+    def withTs(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("ts", timestamp_millis(col("tsMs"))).drop("tsMs")
+    val probeDf = withTs(probes.toDF().toDF("key", "tag", "tsMs"))
+    val buildDf = withTs(builds.toDF().toDF("key", "price", "tsMs"))
+    // one addData call is one block, so one input partition of the batch
+    val blocks = 3 * slots + 2
+    val probeRows = (1 to blocks).map(b => Seq((b % 5, s"p$b", 1000L * b + 500)))
+    val buildRows = (1 to blocks).map(b => Seq((b % 5, b, 1000L * b))) :+
+      Seq((99, 0, 1000000L)) // moves the watermark past every probe
+    probeRows.foreach(probes.addData(_))
+    buildRows.foreach(builds.addData(_))
+    val q = AsOfJoin.joinDataFrames(probeDf, buildDf, "key", "ts")
+      .writeStream.format("memory").queryName("asof_fanout").outputMode("append").start()
+    try {
+      val (_, seen) = scheduled(q.processAllAvailable())
+      assert(seen.stageTasks.nonEmpty)
+      assert(seen.stageTasks.max <= 2 * slots,
+        s"tasks per stage ${seen.stageTasks} for $blocks blocks per side on $slots slots")
+      // one more batch runs with the moved watermark and flushes the probes
+      builds.addData((99, 0, 1000001L))
+      q.processAllAvailable()
+      def rows(ds: org.apache.spark.sql.Dataset[AsOfJoin.AsOfJoined]) =
+        ds.collect().map(j => (j.k, j.probeTs, j.probePayload.toSeq, j.buildTs,
+          j.buildPayload.map(_.toSeq))).sortBy(r => (r._1, r._2)).toSeq
+      val streamed = rows(spark.table("asof_fanout").as[AsOfJoin.AsOfJoined])
+      val batch = rows(AsOfJoin.joinDataFrames(
+        withTs(probeRows.flatten.toDF("key", "tag", "tsMs")),
+        withTs((buildRows.flatten :+ ((99, 0, 1000001L))).toDF("key", "price", "tsMs")),
+        "key", "ts"))
+      assert(streamed.size == blocks)
+      assert(streamed == batch)
+    } finally q.stop()
   }
 
   test("processing-time lookup join reproduces the documented race (README.md:268-301)") {

@@ -1,14 +1,12 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 /** `Tables.table` infers a table's parquet schema once and reuses it while
@@ -16,33 +14,10 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
   * listing is never reused. */
 class TablesSpec extends SparkSpec {
 
-  private val MarkerKey = "graft.tablesspec.marker"
-
-  /** Runs `body` and counts the Spark jobs it submitted. The listener bus
-    * is asynchronous but delivers in order, so a marker job is run after
-    * `body`: once its start arrives, every earlier job start has too. */
+  /** Runs `body` and counts the Spark jobs it submitted. */
   private def jobsDuring[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val starts = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        starts.put(Option(e.properties).flatMap(p => Option(p.getProperty(MarkerKey)))
-          .getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      val result = body
-      sc.setLocalProperty(MarkerKey, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(MarkerKey, null)
-      var jobs = 0
-      var next = starts.poll(60, TimeUnit.SECONDS)
-      while (next != "marker") {
-        assert(next != null, "the marker job's start never arrived")
-        jobs += 1
-        next = starts.poll(60, TimeUnit.SECONDS)
-      }
-      (result, jobs)
-    } finally sc.removeSparkListener(listener)
+    val (result, seen) = scheduled(body)
+    (result, seen.jobs)
   }
 
   private def freshDir(prefix: String): String =

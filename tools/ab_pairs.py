@@ -14,8 +14,11 @@ the session does not favour one side. A_DIR is the baseline (say, a
 Prints, for each pair, both sides' values of every reported metric; then per
 side the median and Q1/Q3 of each metric, B's wins out of the pairs (by the
 metric's `better` direction in BENCHMARK.json), and the failed ops. By
-default the metrics are the end-to-end ones; with --trace 1 the run reports
-per-layer metrics, so name them with --metric. Every `pizzabench: failed op:`
+default the metrics are the end-to-end ones. A traced run (--trace 1)
+reports only the per-layer metrics and an untraced one only the end-to-end
+ones, so a --metric the chosen mode does not report is rejected before any
+run; a metric still missing from a run's result is reported for that pair
+and left out of its statistics. Every `pizzabench: failed op:`
 line a run writes to stderr is echoed, tagged with its side and seed, so a
 drain past the budget can be told from a wrong result table.
 """
@@ -75,6 +78,12 @@ def main():
     unknown = [m for m in metrics if m not in better]
     if unknown:
         sys.exit("unknown metric(s): %s" % ", ".join(unknown))
+    reported = {m["name"] for m in bench["per_layer" if a.trace else "end_to_end"]}
+    unreported = [m for m in metrics if m not in reported]
+    if unreported:
+        sys.exit("--trace %d runs do not report: %s (they report the %s metrics)"
+                 % (a.trace, ", ".join(unreported),
+                    "per-layer" if a.trace else "end-to-end"))
     sides = {"A": os.path.abspath(a.a_dir), "B": os.path.abspath(a.b_dir)}
     for d in sides.values():
         if not os.path.isfile(os.path.join(d, "pizzabench", "run.py")):
@@ -83,7 +92,7 @@ def main():
     values = {s: {m: [] for m in metrics} for s in sides}
     failed = {s: [0, 0, 0] for s in sides}  # failed ops, attempted ops, runs without result
     wins = {m: 0 for m in metrics}
-    decided = 0
+    decided = {m: 0 for m in metrics}
     for i in range(a.pairs):
         seed = a.first_seed + i
         order = ("A", "B") if i % 2 == 0 else ("B", "A")
@@ -100,10 +109,14 @@ def main():
         if got["A"] is None or got["B"] is None:
             print("pair %d seed %d (%s first): incomplete" % (i, seed, order[0]))
             continue
-        decided += 1
         cells = []
         for m in metrics:
+            missing = [s for s in sides if m not in got[s]["metrics"]]
+            if missing:
+                cells.append("%s missing in %s" % (m, " and ".join(missing)))
+                continue
             va, vb = got["A"]["metrics"][m]["value"], got["B"]["metrics"][m]["value"]
+            decided[m] += 1
             values["A"][m].append(va)
             values["B"][m].append(vb)
             if (vb < va) if better[m] == "lower" else (vb > va):
@@ -113,15 +126,18 @@ def main():
         print("pair %d seed %d (%s first): %s" % (i, seed, order[0], "; ".join(cells)),
               flush=True)
 
-    if not decided:
+    if not any(decided.values()):
         sys.exit("no complete pair")
     print()
     for m in metrics:
+        if not decided[m]:
+            print("%-20s no pair reported it" % m)
+            continue
         (a1, am, a3), (b1, bm, b3) = quartiles(values["A"][m]), quartiles(values["B"][m])
         print("%-20s A median %.4g [Q1 %.4g, Q3 %.4g]  B median %.4g [Q1 %.4g, Q3 %.4g]"
               "  B-A %+.4g (%+.1f%%), A Q3-Q1 %.4g; B better in %d of %d pairs"
               % (m, am, a1, a3, bm, b1, b3, bm - am,
-                 100.0 * (bm - am) / am if am else 0.0, a3 - a1, wins[m], decided))
+                 100.0 * (bm - am) / am if am else 0.0, a3 - a1, wins[m], decided[m]))
     for s in sides:
         print("%s failed ops %d of %d; runs without a result %d"
               % (s, failed[s][0], failed[s][1], failed[s][2]))
