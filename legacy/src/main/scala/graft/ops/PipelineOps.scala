@@ -967,7 +967,7 @@ object PipelineOps {
     * total in one ROLLUP pass — the table a training-mix session reads
     * before setting [[StratRates]]-style keep rates (how much 'good'
     * mass does each source actually hold). GROUPING() markers + '(all)'
-    * labels per the events_rollup discipline; quality comes from the
+    * labels mark the rolled-up levels; quality comes from the
     * single-sourced [[TextOps.withQuality]] gate so this can never
     * disagree with the sampler/curator tiers. One map-side-combining
     * aggregation; grouping-set expansion happens before the exchange. */
@@ -986,7 +986,7 @@ object PipelineOps {
       .orderBy("g_source", "g_quality", "source", "quality")
 
   /** The CUBE completion of the governance family (ROLLUP →
-    * [[corpusQualityMatrix]], PIVOT → RefOps.eventsPivot): docs and
+    * [[corpusQualityMatrix]]): docs and
     * token mass over EVERY subset of {source, quality, lang} — all 8
     * grouping sets — because the mix-planner's questions cross the
     * hierarchy ("how much good-quality German mass, any source?" is a

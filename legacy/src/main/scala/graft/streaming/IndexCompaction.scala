@@ -99,31 +99,4 @@ object IndexCompaction {
       .select(log.columns.map(col): _*)
     swapIn(s, path, folded)
   }
-
-  /** Compact a ledger whose read fold is PREFERRED-then-first — per
-    * key, the row minimizing the caller's `preference` sort key (an
-    * ascending struct; ties broken inside it by batch id). The
-    * [[EnrichIngest]] ledger is the client: prefer matched enrichments
-    * over unmatched (struct(1 − matched, batch_id)), then the first
-    * delivery. Keeping exactly the elected row, with its original
-    * batch id and preference, is a fixed point under the same argument
-    * as [[compactFirstDelivery]] EXTENDED by the store's emission
-    * rules: a future append is a new key (unaffected), a replayed
-    * emission (byte-identical to a logged row, so its preference ties
-    * or exceeds the kept minimum), or a genuinely new upgrade — whose
-    * preference is smaller EXACTLY when the fold should re-elect it,
-    * which the post-compaction log still does. Requires `preference`
-    * to be monotone in the fold's election order, which each client
-    * store must argue in its own scaladoc. */
-  def compactPreferredDelivery(s: SparkSession, path: String,
-      keyCols: Seq[String], preference: org.apache.spark.sql.Column): Unit = {
-    recoverIfInterrupted(s, path)
-    val log = s.read.parquet(path)
-    val rest = log.columns.filterNot(keyCols.contains).toSeq
-    val folded = log.groupBy(keyCols.map(col): _*)
-      .agg(min_by(struct(rest.map(col): _*), preference).as("__r"))
-      .select((keyCols.map(col) ++ rest.map(c => col(s"__r.$c").as(c))): _*)
-      .select(log.columns.map(col): _*)
-    swapIn(s, path, folded)
-  }
 }

@@ -50,16 +50,15 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * history. The LEDGER compacts to one row per doc
   * ([[IndexCompaction.compactFirstDelivery]] — all rows for a key are
   * byte-identical by the replay argument, so first-delivery election
-  * is a fixed point); the registry is NOT compactable (strict-below
-  * probes — the [[SetDiffIngest]] replay-horizon class). */
+  * is a fixed point); the registry is NOT compactable (its probes are
+  * strict-below, so a fold would move their replay horizon). */
 object PackIngest {
   private val NShards = graft.ops.PipelineOps.NShards
   private val CtxTokens = graft.ops.PipelineOps.CtxTokens
 
   /** Seed an empty store. Overwrites BOTH the registry and the ledger:
     * re-initializing a used dir must not carry a dead campaign's
-    * assignments (they'd win the min-batch election — the
-    * [[EnrichIngest.init]] lesson). */
+    * assignments (they'd win the min-batch election). */
   def init(s: SparkSession, dir: String): Unit = {
     s.range(0).select(col("id").as("doc_id"), col("id").as("shard"),
       lit(0).cast("int").as("n_tok"), col("id").as("batch_id"))

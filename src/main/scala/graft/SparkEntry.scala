@@ -3,7 +3,8 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
 
 /** Driver contract — see SURVEY.md §7. Operator keys follow SURVEY.md
   * §2's inventory; the implementations live in graft.ops.RefOps (batch,
-  * oracle-checked) and its graft.streaming twins (ScalaTest-checked).
+  * oracle-checked), built on the graft.streaming operators the streaming
+  * pipelines use (ScalaTest-checked).
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */

@@ -3,7 +3,7 @@ package graft
 import java.io.FileNotFoundException
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Loaders for the parquet tables the pipelines read (TESTDATA.md).
@@ -36,10 +36,12 @@ import org.apache.spark.sql.types.StructType
   */
 object Tables {
 
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
   /** Session confs that change the schema parquet inference derives from
-    * the same files. [[events]] sets the first. */
+    * the same files. [[events]] may set the first. */
   private val InferenceConfs = Seq(
-    "spark.sql.legacy.parquet.nanosAsLong",
+    NanosAsLong,
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
@@ -89,10 +91,21 @@ object Tables {
     * TIMESTAMP(MICROS) without a UTC flag (arrives as TIMESTAMP_NTZ).
     * Branch on what the file actually contains and normalize both to the
     * engine-standard TimestampType (UTC session TZ, SURVEY §1.3) so every
-    * downstream operator sees one ts type regardless of harness vintage. */
+    * downstream operator sees one ts type regardless of harness vintage.
+    *
+    * The session's confs are left as they are, except for the NANOS
+    * vintage: Spark refuses that type unless
+    * `spark.sql.legacy.parquet.nanosAsLong` is set, and the scan reads the
+    * conf when it runs, so it is set on the session and stays set. */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = table(s, d, "events")
+    val df =
+      try table(s, d, "events")
+      catch {
+        case e: AnalysisException if e.getCondition == "PARQUET_TYPE_ILLEGAL" &&
+            e.getMessage.contains("TIMESTAMP(NANOS") =>
+          s.conf.set(NanosAsLong, "true")
+          table(s, d, "events")
+      }
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         df.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables._
@@ -9,6 +9,11 @@ import graft.functions.Functions._
 /** The reference's exercised operator surface (SURVEY.md §2), re-expressed
   * Spark-first over the driver's TPC-H-ish parquet tables so every operator
   * has a DuckDB oracle. Key names follow SURVEY.md §2's `key` column.
+  * The registry holds that inventory and two companions of it: the
+  * decode's dead-letter path (`fmt_debezium_dlq`) and the §2.6
+  * transaction-buffered emit (`txn_buffered_emit`). Nothing beyond it:
+  * the reference has no outer/semi/anti joins, set operations, grouping
+  * sets or HOP/SESSION windows (SURVEY.md §2.3, §2.4, §2.6).
   *
   * Scale notes are inline per operator — each query is written so the plan
   * Catalyst produces survives a 100 TB input: filters/projections sit
@@ -255,49 +260,6 @@ object RefOps {
       .agg(count(lit(1)).as("n"))
       .orderBy(col("event_type").asc_nulls_first, col("hr"))
 
-  /** Flink HOP window (sliding 2 h every 1 h) as Spark's native sliding
-    * `window()` — each event lands in size/slide = 2 windows, assigned
-    * inside the partial aggregate (map-side), so the shuffle moves
-    * (type, window) partial counts, never 2× the events. The null-ts
-    * guard is explicit because Spark's window expression silently drops
-    * null timestamps while a SQL UNION-ALL oracle would keep a null
-    * bucket — same rows, stated in both engines. */
-  val aggHopCount: Q = (s, d) =>
-    events(s, d)
-      .where(col("ts").isNotNull)
-      .groupBy(col("event_type"), window(col("ts"), "2 hours", "1 hour"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("event_type"), col("window.start").as("win_start"), col("n"))
-      .orderBy(col("event_type").asc_nulls_first, col("win_start"))
-
-  /** Flink CUMULATE window (1-day period growing in 6-h steps): every
-    * event lands in each window that starts at its day boundary and
-    * ends at 6 h, 12 h, … after it — the early-partial-results pattern
-    * (a dashboard shows the day's running total four times before the
-    * day closes). The scale-correct plan aggregates FIRST: one tumbling
-    * 6-h step aggregate (map-side partial, tiny (type, step) frame),
-    * THEN explodes each step row into the ≤ 4 cumulate windows it feeds
-    * and re-aggregates — the explode multiplies a frame of size
-    * |types|·|steps|, never the event stream. Windows align to epoch in
-    * both engines (6 h and 1 day divide the epoch origin). */
-  val aggCumulateCount: Q = (s, d) => {
-    val StepUs = 21_600_000_000L // 6 hours
-    val step = events(s, d)
-      .where(col("ts").isNotNull)
-      .groupBy(col("event_type"), window(col("ts"), "6 hours"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("event_type"),
-        unix_micros(col("window.start")).as("step_us"), col("n"))
-    step
-      .withColumn("day_us", expr("(step_us div 86400000000) * 86400000000"))
-      .withColumn("win_end_us", explode(expr(
-        s"sequence(step_us + ${StepUs}L, day_us + 86400000000L, ${StepUs}L)")))
-      .groupBy(col("event_type"), timestamp_micros(col("day_us")).as("win_start"),
-        timestamp_micros(col("win_end_us")).as("win_end"))
-      .agg(sum("n").as("n"))
-      .orderBy(col("event_type").asc_nulls_first, col("win_start"), col("win_end"))
-  }
-
   // -- §2.5 scalar functions ----------------------------------------------
 
   /** JSON_VALUE with RETURNING INT (05-kafka-logical-msg-flink.json:14). */
@@ -523,576 +485,6 @@ object RefOps {
       .orderBy("event_id")
   }
 
-  /** Gap-based sessionization (30-minute inactivity gap): the classic
-    * clickstream operator the vestigial datagen demo points at
-    * (scripts/datagen.py sessions table). Two window passes over one
-    * shuffle on user_id: flag gap-starts with lag, number sessions with a
-    * running sum — O(n log n) per user partition, no self-join. */
-  val eventsSessionize: Q = (s, d) => {
-    val byUser = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    events(s, d)
-      .withColumn("prev_ts", lag("ts", 1).over(byUser))
-      .withColumn("new_sess",
-        when(col("prev_ts").isNull ||
-          unix_millis(col("ts")) - unix_millis(col("prev_ts")) > 30L * 60 * 1000, 1)
-          .otherwise(0))
-      .withColumn("session_id", sum("new_sess").over(byUser))
-      .groupBy("user_id", "session_id")
-      .agg(count(lit(1)).as("n_events"),
-        min("event_id").as("first_event"),
-        max("event_id").as("last_event"))
-      .orderBy("user_id", "session_id")
-  }
-
-  /** Ordered conversion funnel view → click → purchase per user: each
-    * stage's timestamp is the FIRST qualifying event strictly after the
-    * previous stage (not merely the first of its type — ordering is the
-    * semantics). Three min-aggregations chained by user-keyed joins; all
-    * shuffles hash on the uniform user_id, and each stage's input is
-    * pre-filtered to one event type, so the heaviest join input is
-    * |one type's events| + |users| rows — no window over the full
-    * per-user history and no event×event self-join. Left joins keep
-    * users who stall mid-funnel; `stage` counts how far they got.
-    *
-    * Skew note (pinned by SkewSpec): each stage fuses its join with the
-    * per-user partial min, so AQE's skew-join split declines by default
-    * (splitting would break the fused aggregate's distribution). When
-    * one power user concentrates a multi-GB partition, set
-    * `spark.sql.adaptive.forceOptimizeSkewedJoin=true` — the split's
-    * extra exchange costs far less than the straggler task; results are
-    * identical either way. */
-  val eventsFunnel: Q = (s, d) => {
-    val ev = events(s, d).select(col("user_id"), col("event_type"), col("ts"))
-    // v feeds three branches and c two (no cross-branch CSE in Spark):
-    // materialize each per-user aggregate — |users| rows — once, or the
-    // filtered events scan re-runs per reference
-    val v = ev.where(col("event_type") === "view")
-      .groupBy("user_id").agg(min("ts").as("v_ts"))
-      .localCheckpoint()
-    val c = ev.where(col("event_type") === "click").join(v, "user_id")
-      .where(col("ts") > col("v_ts"))
-      .groupBy("user_id").agg(min("ts").as("c_ts"))
-      .localCheckpoint()
-    val p = ev.where(col("event_type") === "purchase").join(c, "user_id")
-      .where(col("ts") > col("c_ts"))
-      .groupBy("user_id").agg(min("ts").as("p_ts"))
-    v.join(c, Seq("user_id"), "left").join(p, Seq("user_id"), "left")
-      .select(col("user_id"), col("v_ts"), col("c_ts"), col("p_ts"),
-        (lit(1) + col("c_ts").isNotNull.cast("int") +
-          col("p_ts").isNotNull.cast("int")).as("stage"))
-      .orderBy("user_id")
-  }
-
-  /** Cohort retention: users grouped by their first-activity day, counted
-    * on each later day they return — the standard growth/engagement view
-    * over a clickstream, and the third member of the events family next
-    * to sessionize and funnel. Shape: one user-keyed aggregate for the
-    * cohort day (partial-agg friendly), one distinct over (user, day)
-    * — activity collapses BEFORE the join so the join input is bounded by
-    * |users|·|active days|, not |events| — then a (cohort, offset)
-    * aggregate. All keys uniform; nothing scales with a single user's
-    * event count, so no power-user hot spot. */
-  val eventsRetention: Q = (s, d) => {
-    val ev = events(s, d).select(col("user_id"), to_date(col("ts")).as("day"))
-    val cohorts = ev.groupBy("user_id").agg(min("day").as("cohort_day"))
-    val active = ev.distinct()
-    active.join(cohorts, "user_id")
-      .groupBy(col("cohort_day"),
-        datediff(col("day"), col("cohort_day")).as("day_offset"))
-      .agg(count(lit(1)).as("n_users")) // (user, day) distinct ⇒ count = users
-      // timestamp, not date: the harness hash-compare is dtype-sensitive
-      // and engines disagree on DATE's arrow representation
-      .select(col("cohort_day").cast("timestamp").as("cohort_day"),
-        col("day_offset"), col("n_users"))
-      .orderBy("cohort_day", "day_offset")
-  }
-
-  /** Hourly error-rate spike detection — the pipeline-health monitor a
-    * production ingest runs next to its data movement. The statistics
-    * stay CROSS-ENGINE EXACT despite being, well, statistics: per-hour
-    * counts and their sums/sums-of-squares are BIGINT-exact aggregates,
-    * mean/variance derive from those integers by a fixed arithmetic
-    * shape (q/n − mean², then one IEEE sqrt), so the z-score is
-    * bit-identical in any engine — no order-dependent double
-    * accumulation anywhere. Plan: one shuffle for the hourly aggregate;
-    * the corpus-wide moments are a 1-row broadcast horizon. */
-  val eventsErrorSpike: Q = (s, d) =>
-    errorSpikeFinalize(events(s, d)
-      .groupBy(date_trunc("hour", col("ts")).as("hour"))
-      .agg(count(lit(1)).as("n_total"),
-        sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("n_err")))
-
-  /** The z-finalize over any `(hour, n_total, n_err)` frame — factored
-    * out so the streaming twin scores its watermark-finalized hourly
-    * partials with the EXACT batch arithmetic (TwinReplaySpec), the same
-    * single-source discipline as the KMV finalization. */
-  private[graft] def errorSpikeFinalize(hourly: DataFrame): DataFrame = {
-    val stats = hourly.agg(count(lit(1)).as("n_hours"),
-      sum("n_err").as("s"), sum(col("n_err") * col("n_err")).as("q"))
-    val z = hourly.crossJoin(broadcast(stats)) // 1-row moments frame
-      .withColumn("mean", col("s").cast("double") / col("n_hours").cast("double"))
-      .withColumn("variance",
-        col("q").cast("double") / col("n_hours").cast("double") -
-          col("mean") * col("mean"))
-      .withColumn("z", when(col("variance") > 0,
-        (col("n_err").cast("double") - col("mean")) / sqrt(col("variance")))
-        .otherwise(lit(0.0)))
-    z.select(col("hour"), col("n_total"), col("n_err"),
-        round(col("n_err").cast("double") / col("n_total").cast("double"), 6).as("err_rate_r"),
-        round(col("z"), 6).as("z_r"),
-        (col("z") > 2.0).as("is_spike"))
-      .orderBy("hour")
-  }
-
-  /** Last-touch attribution: each purchase credits the most recent
-    * PRECEDING non-purchase event of its user (ties broken by event_id,
-    * like sessionize); purchases with no preceding touch are "direct".
-    * One window pass over the same user_id shuffle the other events
-    * operators use — the `last(_, ignoreNulls)` frame keeps a single
-    * value of running state per row, so the pass is O(n) per user
-    * partition with no self-join and no per-user history blowup. The
-    * final channel rollup is a tiny-key aggregate. */
-  val eventsAttribution: Q = (s, d) => {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    events(s, d)
-      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-      .withColumn("touch",
-        last(when(col("event_type") =!= "purchase", col("event_type")),
-          ignoreNulls = true).over(w))
-      .where(col("event_type") === "purchase")
-      .groupBy(coalesce(col("touch"), lit("direct")).as("channel"))
-      .agg(count(lit(1)).as("n_purchases"),
-        countDistinct(col("user_id")).as("n_users"))
-      .orderBy("channel")
-  }
-
-  private val PathTopN = 20
-
-  /** Top-20 three-step event-type paths (the "common journeys" view):
-    * per-user ordered trigrams via two leads over one user_id window
-    * pass, counted globally. The top-k is TakeOrderedAndProject over the
-    * (tiny) path-key aggregate — at most 5³ = 125 distinct paths exist,
-    * so the final step is driver-merge of per-partition heaps, never a
-    * global sort of event data. */
-  val eventsPathTopk: Q = (s, d) => {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    events(s, d)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      // null-typed events are treated as nonexistent BEFORE the window
-      // (adjacency skips over them) — and the oracle filters the same
-      // way, because the engines otherwise diverge on a null inside a
-      // trigram: Spark's concat_ws skips it, SQL's || nulls the path
-      .where(col("event_type").isNotNull)
-      .withColumn("t2", lead("event_type", 1).over(w))
-      .withColumn("t3", lead("event_type", 2).over(w))
-      .where(col("t3").isNotNull)
-      .groupBy(concat_ws(">", col("event_type"), col("t2"), col("t3")).as("path"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("path"))
-      .limit(PathTopN)
-  }
-
-  /** Per-type revenue statistics with ORDER-INDEPENDENT exactness: the
-    * double `value` column is cast to DECIMAL(18,6) before summing, so
-    * the aggregate is exact and deterministic under any shuffle order
-    * (a double sum is neither), then cast back for the report. One
-    * map-side-combining shuffle on the tiny type key. */
-  val eventsRevenueStats: Q = (s, d) =>
-    events(s, d)
-      // null types bucket under an explicit label: their revenue is
-      // still revenue, and a raw null group would sort NULLS FIRST in
-      // Spark but NULLS LAST in the oracle's ORDER BY — a positional
-      // compare mismatch waiting for the first corrupt row
-      .select(coalesce(col("event_type"), lit("unknown")).as("event_type"),
-        col("value").cast("decimal(18,6)").as("v"))
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"),
-        count(col("v")).as("n_value"), // null revenues excluded from the mean
-        sum("v").cast("double").as("total_v"),
-        min("v").cast("double").as("min_v"),
-        max("v").cast("double").as("max_v"))
-      .withColumn("mean_r",
-        when(col("n_value") === 0, lit(null).cast("double"))
-          .otherwise(round(col("total_v") / col("n_value").cast("double"), 6)))
-      .orderBy("event_type")
-
-  /** TPC-H Q1-shaped pricing summary — the scan-bound macro companion
-    * to [[q3ShippingPriority]] (join-bound): one full fact scan, a
-    * pushed date predicate, and a 6-aggregate map-side-combining fold
-    * per (returnflag, linestatus) — the shape whose 100 TB cost is
-    * pure scan bandwidth, which is why every column not aggregated
-    * must be pruned at the reader (pinned). All money math in DECIMAL
-    * (sums exact under any shuffle order), cast back for the report;
-    * averages as micro-longs off the exact sums. */
-  val q1PricingSummary: Q = (s, d) =>
-    graft.Tables.lineitem(s, d)
-      .where(col("l_shipdate") <= lit("2001-09-01").cast("timestamp"))
-      // scales sized to the data's true 2-decimal money grid so the
-      // TRIPLE product stays inside DECIMAL(38): price(12,2) ×
-      // (1-disc)(5,2) × (1+tax)(5,2) → (24,6) exact in both engines —
-      // at (18,6) inputs the product needs scale 18 and precision > 38,
-      // where Spark silently rounds (allowPrecisionLoss) and DuckDB
-      // truncates DIFFERENTLY (caught live: one low-order double bit)
-      .select(col("l_returnflag"), col("l_linestatus"),
-        col("l_quantity").cast("decimal(12,2)").as("qty"),
-        col("l_extendedprice").cast("decimal(12,2)").as("price"),
-        col("l_discount").cast("decimal(4,2)").as("disc"),
-        col("l_tax").cast("decimal(4,2)").as("tax"))
-      .groupBy("l_returnflag", "l_linestatus")
-      // sums published as exact micro-LONGS, not doubles: at sf1 the
-      // exact charge sum already needs > 53 mantissa bits, and the two
-      // engines round the decimal→double conversion differently by one
-      // ulp (caught live) — the micro grid sidesteps conversion
-      // entirely (headroom to ~9.2e18 micro ≈ 9.2e12 currency units
-      // per group)
-      .agg(
-        (sum("qty") * 1000000).cast("long").as("sum_qty_micro"),
-        (sum("price") * 1000000).cast("long").as("sum_base_price_micro"),
-        (sum(expr("price * (1 - disc)")) * 1000000).cast("long")
-          .as("sum_disc_price_micro"),
-        (sum(expr("price * (1 - disc) * (1 + tax)")) * 1000000).cast("long")
-          .as("sum_charge_micro"),
-        count(lit(1)).as("count_order"),
-        expr("CAST(round(CAST(sum(disc) AS DOUBLE) / count(1) * 1000000, 0) AS BIGINT)")
-          .as("avg_disc_micro"))
-      .orderBy("l_returnflag", "l_linestatus")
-
-  /** TPC-H Q3-shaped macro query — the canonical 3-way
-    * dim⋈fact⋈fact analytical shape over the harness star, exercising
-    * the planner decisions the single-operator keys pin in isolation,
-    * TOGETHER: segment filter pushed into the customer scan, the
-    * filtered dim broadcast against orders, the date predicates pushed
-    * into both fact scans, revenue summed in DECIMAL (exact under any
-    * shuffle order — the [[eventsRevenueStats]] discipline, here on a
-    * decimal PRODUCT), and the top-10 cut as TakeOrderedAndProject.
-    * At 100 TB this is the query AQE re-plans mid-flight; at the
-    * harness SFs it is the macro smoke that all those pieces compose. */
-  val q3ShippingPriority: Q = (s, d) => {
-    val cut = lit("1998-06-01").cast("timestamp")
-    val cust = graft.Tables.customer(s, d)
-      .where(col("c_mktsegment") === "BUILDING").select("c_custkey")
-    val ord = graft.Tables.orders(s, d)
-      .where(col("o_orderdate") < cut)
-      .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
-    val li = graft.Tables.lineitem(s, d)
-      .where(col("l_shipdate") > cut)
-      .select(col("l_orderkey"),
-        (col("l_extendedprice").cast("decimal(18,6)") *
-          (lit(1).cast("decimal(18,6)") - col("l_discount").cast("decimal(18,6)")))
-          .as("rev"))
-    li.join(ord, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-      .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-      .agg(sum("rev").cast("double").as("revenue"))
-      .orderBy(col("revenue").desc, col("l_orderkey"))
-      .limit(10)
-  }
-
-  /** TPC-H Q18-shaped large-volume-customer query — completes the
-    * macro trio with the GROUP-HAVING + SEMI-reduction shape: find
-    * orders whose total quantity clears a threshold (a corpus-wide
-    * aggregate with a selective HAVING — the qualifying set is tiny,
-    * ~1 % of orders at the 250 cut), then enrich ONLY those through
-    * the customer dim. Scale plan: the heavy side aggregates FIRST
-    * (map-side partial sum per order key) and everything after runs on
-    * the qualifying keys — the dims join a ~1 % frame, never the fact.
-    * No re-join with lineitem is needed at all: the aggregate's own
-    * `total_qty_micro` IS the reported quantity, so the fact is
-    * touched exactly once (PlanSpec pins the aggregate-before-any-join
-    * shape). Quantity is integral in the data; summed as DECIMAL and
-    * published micro-long per the Q1 lesson. */
-  val q18LargeVolume: Q = (s, d) => {
-    val qty = graft.Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_quantity").cast("decimal(12,2)").as("qty"))
-    val big = qty.groupBy("l_orderkey")
-      .agg((sum("qty") * 1000000).cast("long").as("total_qty_micro"))
-      .where(col("total_qty_micro") > 250L * 1000000L)
-    big.join(graft.Tables.orders(s, d),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(graft.Tables.customer(s, d),
-        col("o_custkey") === col("c_custkey"))
-      .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
-        col("o_orderdate"), col("total_qty_micro"))
-      .orderBy(col("total_qty_micro").desc, col("o_orderkey"))
-  }
-
-  /** TPC-H Q4-shaped order-priority check — the EXISTS / LEFT-SEMI
-    * shape, the one join type the registry hadn't demonstrated: count
-    * orders per priority having AT LEAST ONE late lineitem (shipped
-    * > 30 days after the order date — the harness's own columns).
-    * Semi join is the scale-correct spelling: the probe side emits
-    * each order at most once regardless of how many lineitems match
-    * (an inner join + distinct would shuffle the full match
-    * multiplicity first), and the late predicate rides inside the
-    * join condition so Spark evaluates it before materializing
-    * anything. */
-  val q4OrderPriority: Q = (s, d) => {
-    val ord = graft.Tables.orders(s, d)
-      .select("o_orderkey", "o_orderdate", "o_orderpriority")
-    val li = graft.Tables.lineitem(s, d).select("l_orderkey", "l_shipdate")
-    ord.join(li,
-        col("o_orderkey") === col("l_orderkey") &&
-          col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 30 DAY"),
-        "left_semi")
-      .groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("order_count"))
-      .orderBy("o_orderpriority")
-  }
-
-  /** Churned-customer report — the NOT-EXISTS / LEFT-ANTI shape
-    * completing the semi/anti join pair ([[q4OrderPriority]] is the
-    * EXISTS half): customers with NO order after the activity cut.
-    * The anti join is the scale-correct spelling of NOT EXISTS: the
-    * date predicate prunes the fact at its scan (only recent orders
-    * ship to the join at all), the build side is the DISTINCT recent
-    * customer keys, and each customer emits at most once — the
-    * set-subtract never materializes the match multiplicity. 618 of
-    * 1500 customers at sf0.01 (non-vacuous by construction on this
-    * date range). */
-  val antiChurnedCustomers: Q = (s, d) => {
-    val recent = graft.Tables.orders(s, d)
-      .where(col("o_orderdate") > lit("2001-01-01").cast("timestamp"))
-      .select("o_custkey")
-    graft.Tables.customer(s, d)
-      .join(recent, col("c_custkey") === col("o_custkey"), "left_anti")
-      .select("c_custkey", "c_name", "c_mktsegment")
-      .orderBy("c_custkey")
-  }
-
-  /** TPC-H Q17-shaped small-quantity-order revenue — the CORRELATED
-    * AGGREGATE shape (lineitems below 20 % of their part's average
-    * quantity). The Spark side is written in the decorrelated form the
-    * optimizer would produce anyway — per-part (sum, count) once, then
-    * one equi-join back — while the oracle keeps the correlated
-    * subquery spelling and DuckDB decorrelates it itself; the compare
-    * pins that both roads meet. The threshold is EXACT integers:
-    * qty < 0.2·avg ⟺ 5·qty·cnt < sum (quantity is integral in the
-    * data), so no division or double ever enters the predicate; the
-    * revenue total is decimal→micro-long per the Q1 lesson. */
-  val q17SmallQuantity: Q = (s, d) => {
-    val li = graft.Tables.lineitem(s, d)
-      .select(col("l_partkey"), col("l_quantity").cast("long").as("qty"),
-        col("l_extendedprice").cast("decimal(12,2)").as("price"))
-    val stats = li.groupBy("l_partkey")
-      .agg(sum("qty").as("sum_qty"), count(lit(1)).as("cnt"))
-    li.join(stats, "l_partkey")
-      .where(col("qty") * 5L * col("cnt") < col("sum_qty"))
-      .agg(count(lit(1)).as("n_small"),
-        (sum("price") * 1000000).cast("long").as("revenue_micro"))
-  }
-
-  /** Left-outer dim enrichment — the incomplete-dimension join every
-    * real pipeline runs daily (the dim snapshot lags the fact stream:
-    * late CDC, partial exports, new keys not yet in the warehouse).
-    * Here the customer snapshot holds only two segments, and every
-    * order must SURVIVE enrichment anyway: LEFT OUTER preserves the
-    * fact row, and the null discipline is explicit — coalesce to
-    * 'unknown'/'(none)' labels plus a `matched` flag, so downstream
-    * aggregations can both count the coverage gap and group on it
-    * (a raw null would sort NULLS FIRST in Spark / NULLS LAST in
-    * DuckDB, the [[eventsRevenueStats]] lesson). Scale plan: the dim
-    * side broadcasts (a filtered dim is the canonical broadcast
-    * candidate — even a 10⁹-row customer dim prunes to its snapshot
-    * segments before shipping); the fact never shuffles. PlanSpec pins
-    * LeftOuter + BroadcastHashJoin + no fact-side exchange. */
-  val joinLeftOuterEnrich: Q = (s, d) => {
-    val dim = graft.Tables.customer(s, d)
-      .where(col("c_mktsegment").isin("BUILDING", "AUTOMOBILE"))
-      .select("c_custkey", "c_name", "c_mktsegment")
-    graft.Tables.orders(s, d)
-      .select("o_orderkey", "o_custkey")
-      .join(broadcast(dim), col("o_custkey") === col("c_custkey"), "left_outer")
-      .select(col("o_orderkey"), col("o_custkey"),
-        coalesce(col("c_name"), lit("unknown")).as("cust_name"),
-        coalesce(col("c_mktsegment"), lit("(none)")).as("segment"),
-        when(col("c_custkey").isNotNull, 1).otherwise(0).cast("int").as("matched"))
-      .orderBy("o_orderkey")
-  }
-
-  /** Deterministic "refreshed" corpus twin for the set-op keys: the
-    * standing documents table after one simulated re-crawl — every
-    * tenth document decommissioned (dropped from the refresh), every
-    * seventh re-extracted with revised content, and one NEWLY CRAWLED
-    * document per ~nine standing (keyed at -(doc_id+1): negative ids
-    * are disjoint from any non-negative standing id space at every SF —
-    * no magic offset to collide with). All three mutations are doc_id
-    * arithmetic, so the oracle reproduces the twin exactly. */
-  private[graft] def refreshedDocs(s: SparkSession, d: String): DataFrame =
-    graft.Tables.documents(s, d)
-      .where(pmod(col("doc_id"), lit(10)) =!= 3)
-      .select(col("doc_id"),
-        when(pmod(col("doc_id"), lit(7)) === 0, concat(col("text"), lit(" [rev2]")))
-          .otherwise(col("text")).as("text"))
-      .unionByName(graft.Tables.documents(s, d)
-        .where(pmod(col("doc_id"), lit(9)) === 4)
-        .select((-(col("doc_id") + lit(1L))).as("doc_id"),
-          concat(lit("fresh crawl: "), col("text")).as("text")))
-
-  /** Standing-vs-refreshed corpus reconciliation, the EXCEPT half — the
-    * set-subtract a training pipeline runs when a source re-crawls:
-    * which standing documents are GONE from the refresh (decommissioned
-    * or content-changed)? Spelled as a true set operation (EXCEPT
-    * DISTINCT → LeftAnti + aggregate under the hood, PlanSpec-pinned),
-    * not a manual anti join, because set semantics are the point: a
-    * document is in the delta by (id, content) membership, once,
-    * regardless of row multiplicity. Content is compared by md5
-    * FINGERPRINT, not raw text — the 100 TB spelling: the set-op
-    * shuffle keys on 32 hex chars per row instead of whole document
-    * bodies (md5(NULL) is NULL in both engines and set ops treat NULLs
-    * as equal, so null-text documents reconcile correctly). ~23 % of the
-    * corpus at any SF (1/10 dropped + 6/70 revised) — non-vacuous by
-    * construction. */
-  val setExceptRefresh: Q = (s, d) => {
-    val standing = graft.Tables.documents(s, d)
-      .select(col("doc_id"), md5(col("text")).as("fp"))
-    val refreshed = refreshedDocs(s, d)
-      .select(col("doc_id"), md5(col("text")).as("fp"))
-    standing.except(refreshed).select("doc_id").orderBy("doc_id")
-  }
-
-  /** The INTERSECT half of [[setExceptRefresh]]: documents UNCHANGED
-    * across the refresh — same id, same content fingerprint — the set
-    * every incremental pipeline skips re-processing (re-embedding,
-    * re-scoring) on. INTERSECT DISTINCT plans as LeftSemi + aggregate
-    * (PlanSpec-pinned); same md5-fingerprint key discipline as the
-    * EXCEPT half. ~77 % of the corpus at any SF. */
-  val setIntersectRefresh: Q = (s, d) => {
-    val standing = graft.Tables.documents(s, d)
-      .select(col("doc_id"), md5(col("text")).as("fp"))
-    val refreshed = refreshedDocs(s, d)
-      .select(col("doc_id"), md5(col("text")).as("fp"))
-    standing.intersect(refreshed).select("doc_id").orderBy("doc_id")
-  }
-
-  /** The FULL OUTER completion of the reconciliation family: per-key
-    * change ATTRIBUTION, not just membership — every doc_id present on
-    * either side of the refresh, classified added / dropped / changed /
-    * unchanged. EXCEPT tells a pipeline what to re-process and
-    * INTERSECT what to skip; the diff is the operational ledger both
-    * derive from (and the only form that can see ADDITIONS — a set
-    * subtract is blind to the refresh's new documents by construction).
-    * Plan shape: both sides project to (doc_id, md5 fingerprint) before
-    * the join — the 100 TB discipline again, the full-outer shuffle
-    * keys on 32 hex chars, never document bodies — and the join is a
-    * single equi-key SortMergeJoin FullOuter (PlanSpec pins FullOuter +
-    * no cartesian). Fingerprints compare NULL-SAFELY (`<=>` /
-    * IS NOT DISTINCT FROM): two null-text crawls of the same doc are
-    * 'unchanged', not 'changed' — md5(NULL) is NULL in both engines and
-    * a naive `=` would misfile every null-text document. All four
-    * statuses are non-vacuous at every SF (1/10 dropped, ~6/70 changed,
-    * ~1/9 added, the rest unchanged). */
-  val setDiffRefresh: Q = (s, d) => {
-    val standing = graft.Tables.documents(s, d)
-      .select(col("doc_id"), md5(col("text")).as("fp_s"),
-        lit(true).as("in_s"))
-    val refreshed = refreshedDocs(s, d)
-      .select(col("doc_id"), md5(col("text")).as("fp_r"),
-        lit(true).as("in_r"))
-    standing.join(refreshed, Seq("doc_id"), "full_outer")
-      .select(col("doc_id"),
-        when(col("in_s").isNull, lit("added"))
-          .when(col("in_r").isNull, lit("dropped"))
-          .when(col("fp_s") <=> col("fp_r"), lit("unchanged"))
-          .otherwise(lit("changed")).as("status"))
-      .orderBy("doc_id")
-  }
-
-  /** The UNION completion of the reconciliation family — the MERGE the
-    * refresh pipeline actually materializes: every (doc_id, content
-    * fingerprint) version observed on EITHER side of the re-crawl,
-    * dedup-collapsed. Set semantics are again the point: an unchanged
-    * document collapses to ONE row no matter how many times both sides
-    * carry it, while a changed document legitimately appears twice —
-    * once per observed content version — which is exactly what a
-    * version-retaining corpus store enrolls ([[graft.streaming.SetDiffIngest]]'s
-    * fp registry is this union accumulated batch-wise). UNION DISTINCT
-    * plans as Union + one distinct HashAggregate (PlanSpec-pinned) —
-    * NO join at all, the cheapest member of the family: one shuffle on
-    * (doc_id, 32-hex fingerprint), never document bodies, and the
-    * map-side partial aggregate collapses same-content rows before the
-    * exchange. NULL discipline as the siblings: md5(NULL) is NULL in
-    * both engines and set ops treat NULLs as equal, so a null-text doc
-    * carried by both sides still collapses to one row. */
-  val setUnionRefresh: Q = (s, d) => {
-    val standing = graft.Tables.documents(s, d)
-      .select(col("doc_id"), md5(col("text")).as("fp"))
-    val refreshed = refreshedDocs(s, d)
-      .select(col("doc_id"), md5(col("text")).as("fp"))
-    standing.union(refreshed).distinct().orderBy("doc_id", "fp")
-  }
-
-  /** Multi-level ROLLUP report — the one relational surface the
-    * registry hadn't exercised: (event_type, day) leaf cells, per-type
-    * subtotals, and the grand total in ONE aggregation pass (Spark
-    * expands the grouping sets map-side; no per-level re-scan).
-    * GROUPING() markers ride along so a rolled-up NULL can never be
-    * confused with a real group, and the roll-up labels are explicit
-    * '(all)' strings — the same null-discipline as
-    * [[eventsRevenueStats]]. Revenue sums in DECIMAL(18,6) for
-    * order-independent exactness, cast back for the report. */
-  val eventsRollup: Q = (s, d) =>
-    events(s, d)
-      .select(coalesce(col("event_type"), lit("unknown")).as("event_type"),
-        coalesce(to_date(col("ts")).cast("string"), lit("unknown")).as("day"),
-        col("value").cast("decimal(18,6)").as("v"))
-      .rollup("event_type", "day")
-      .agg(count(lit(1)).as("n"),
-        sum("v").cast("double").as("total_v"),
-        grouping(col("event_type")).cast("int").as("g_type"),
-        grouping(col("day")).cast("int").as("g_day"))
-      .select(coalesce(col("event_type"), lit("(all)")).as("event_type"),
-        coalesce(col("day"), lit("(all)")).as("day"),
-        col("g_type"), col("g_day"), col("n"), col("total_v"))
-      .orderBy("g_type", "g_day", "event_type", "day")
-
-  /** The pivoted daily activity matrix — the other classic relational
-    * reshape beside [[eventsRollup]]: one row per day, one count column
-    * per event type. The type list is EXPLICIT (Spark's two-arg pivot),
-    * which is the scale-correct form twice over: the output schema is
-    * deterministic (an inferred pivot is a driver-side distinct scan
-    * BEFORE the plan even builds), and the aggregation stays one
-    * map-side-combining pass — each (day, type) cell folds into its
-    * column position with no per-type re-scan. Unknown/null types land
-    * nowhere by design; `n_total` rides along so that loss is visible. */
-  private val PivotTypes = Seq("click", "error", "purchase", "signup", "view")
-
-  val eventsPivot: Q = (s, d) =>
-    events(s, d)
-      .select(coalesce(to_date(col("ts")).cast("string"), lit("unknown")).as("day"),
-        col("event_type"))
-      .groupBy("day")
-      .pivot("event_type", PivotTypes)
-      .agg(count(lit(1)))
-      .join(events(s, d)
-        .groupBy(coalesce(to_date(col("ts")).cast("string"), lit("unknown")).as("day"))
-        .agg(count(lit(1)).as("n_total")), Seq("day"))
-      .select(col("day") +: PivotTypes.map(t =>
-        coalesce(col(s"`$t`"), lit(0L)).as(s"n_$t")) :+ col("n_total"): _*)
-      .orderBy("day")
-
-  /** Props-key histogram — the schema-drift detector a JSON ingest runs
-    * next to its decode: every key appearing in the `props` payloads,
-    * with occurrence counts. Invalid or null JSON contributes nothing
-    * (both engines filter identically — Spark's json_object_keys nulls
-    * out, the oracle guards with json_valid). json_object_keys, NOT
-    * from_json into a map: map BUILDING throws DUPLICATED_MAP_KEY under
-    * the default mapKeyDedupPolicy=EXCEPTION, so one valid-but-
-    * duplicate-key payload would kill the stage — key listing never
-    * builds a map. Per-row distinct on BOTH engines pins the
-    * duplicate-key count to 1 regardless of how each JSON parser
-    * surfaces repeats. Scan + one shuffle on the (tiny) key space; a
-    * new upstream field or a typo'd key shows up as a new row, not a
-    * silent decode null three jobs later. */
-  val eventsPropsKeys: Q = (s, d) =>
-    events(s, d)
-      .select(explode(array_distinct(json_object_keys(col("props")))).as("key"))
-      .groupBy("key").agg(count(lit(1)).as("n_events"))
-      .orderBy("key")
-
   // ------------------------------------------------------------------
   // registry
   // ------------------------------------------------------------------
@@ -1114,8 +506,6 @@ object RefOps {
     "agg_group_json_arrayagg" -> aggGroupJsonArrayAgg,
     "agg_pg_json_agg" -> aggPgJsonAgg,
     "agg_hourly_count" -> aggHourlyCount,
-    "agg_hop_count" -> aggHopCount,
-    "agg_cumulate_count" -> aggCumulateCount,
     "fn_json_value" -> fnJsonValue,
     "fn_json_query" -> fnJsonQuery,
     "fn_from_base64" -> fnFromBase64,
@@ -1133,27 +523,6 @@ object RefOps {
     "fn_div" -> fnDiv,
     "txn_metadata" -> txnMetadata,
     "txn_buffered_emit" -> txnBufferedEmit,
-    "events_sessionize" -> eventsSessionize,
-    "events_funnel" -> eventsFunnel,
-    "events_retention" -> eventsRetention,
-    "events_error_spike" -> eventsErrorSpike,
-    "events_attribution" -> eventsAttribution,
-    "events_path_topk" -> eventsPathTopk,
-    "events_revenue_stats" -> eventsRevenueStats,
-    "events_rollup" -> eventsRollup,
-    "events_pivot" -> eventsPivot,
-    "q3_shipping_priority" -> q3ShippingPriority,
-    "q1_pricing_summary" -> q1PricingSummary,
-    "q18_large_volume" -> q18LargeVolume,
-    "q4_order_priority" -> q4OrderPriority,
-    "anti_churned_customers" -> antiChurnedCustomers,
-    "q17_small_quantity" -> q17SmallQuantity,
-    "events_props_keys" -> eventsPropsKeys,
-    "join_left_outer_enrich" -> joinLeftOuterEnrich,
-    "set_except_refresh" -> setExceptRefresh,
-    "set_intersect_refresh" -> setIntersectRefresh,
-    "set_diff_refresh" -> setDiffRefresh,
-    "set_union_refresh" -> setUnionRefresh,
   )
 
   val oracles: Map[String, String] = Map(
@@ -1247,34 +616,6 @@ object RefOps {
       """SELECT event_type, CAST(extract(hour FROM ts) AS INT) AS hr,
          COUNT(*) AS n FROM events GROUP BY event_type, hr
          ORDER BY event_type NULLS FIRST, hr""",
-    "agg_cumulate_count" ->
-      """WITH st AS (
-           SELECT event_type,
-             (CAST(floor(epoch(ts)) AS BIGINT) // 21600) * 21600 AS step_s,
-             COUNT(*) AS n
-           FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
-         ex AS (
-           SELECT event_type, (step_s // 86400) * 86400 AS day_s,
-             unnest(generate_series(step_s + 21600,
-               (step_s // 86400) * 86400 + 86400, 21600)) AS end_s,
-             n
-           FROM st)
-         SELECT event_type,
-           TIMESTAMP '1970-01-01' + day_s * INTERVAL 1 SECOND AS win_start,
-           TIMESTAMP '1970-01-01' + end_s * INTERVAL 1 SECOND AS win_end,
-           CAST(SUM(n) AS BIGINT) AS n
-         FROM ex GROUP BY 1, 2, 3
-         ORDER BY event_type NULLS FIRST, win_start, win_end""",
-    "agg_hop_count" ->
-      """WITH w AS (
-           SELECT event_type, date_trunc('hour', ts) AS win_start
-           FROM events WHERE ts IS NOT NULL
-           UNION ALL
-           SELECT event_type, date_trunc('hour', ts) - INTERVAL 1 HOUR
-           FROM events WHERE ts IS NOT NULL)
-         SELECT event_type, win_start, COUNT(*) AS n
-         FROM w GROUP BY event_type, win_start
-         ORDER BY event_type NULLS FIRST, win_start""",
     "fn_json_value" ->
       """SELECT event_id, CAST(json_extract_string(props, '$.k') AS INT) AS k
          FROM events ORDER BY event_id""",
@@ -1347,249 +688,5 @@ object RefOps {
          SELECT event_id, event_type, tx_id
          FROM rd JOIN cnt USING (tx_id) WHERE cnt.n >= 20
          ORDER BY event_id""",
-    "events_sessionize" ->
-      """WITH flagged AS (
-           SELECT user_id, event_id, ts,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR epoch_ms(ts) - epoch_ms(lag(ts) OVER w) > 30 * 60 * 1000
-                  THEN 1 ELSE 0 END AS new_sess
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         sess AS (
-           SELECT user_id, event_id,
-             CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-           FROM flagged)
-         SELECT user_id, session_id, COUNT(*) AS n_events,
-           MIN(event_id) AS first_event, MAX(event_id) AS last_event
-         FROM sess GROUP BY user_id, session_id
-         ORDER BY user_id, session_id""",
-    "events_funnel" ->
-      """WITH v AS (SELECT user_id, MIN(ts) AS v_ts FROM events
-                    WHERE event_type = 'view' GROUP BY user_id),
-         c AS (SELECT e.user_id, MIN(e.ts) AS c_ts FROM events e
-               JOIN v ON v.user_id = e.user_id
-               WHERE e.event_type = 'click' AND e.ts > v.v_ts GROUP BY e.user_id),
-         p AS (SELECT e.user_id, MIN(e.ts) AS p_ts FROM events e
-               JOIN c ON c.user_id = e.user_id
-               WHERE e.event_type = 'purchase' AND e.ts > c.c_ts GROUP BY e.user_id)
-         SELECT v.user_id, v.v_ts, c.c_ts, p.p_ts,
-           CAST(1 + CASE WHEN c.c_ts IS NULL THEN 0 ELSE 1 END
-                  + CASE WHEN p.p_ts IS NULL THEN 0 ELSE 1 END AS INT) AS stage
-         FROM v
-         LEFT JOIN c ON c.user_id = v.user_id
-         LEFT JOIN p ON p.user_id = v.user_id
-         ORDER BY v.user_id""",
-    "events_retention" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS day FROM events),
-         f AS (SELECT user_id, MIN(day) AS cohort_day FROM e GROUP BY user_id),
-         a AS (SELECT DISTINCT user_id, day FROM e)
-         SELECT CAST(f.cohort_day AS TIMESTAMP) AS cohort_day,
-           CAST(a.day - f.cohort_day AS INT) AS day_offset,
-           CAST(COUNT(*) AS BIGINT) AS n_users
-         FROM a JOIN f ON a.user_id = f.user_id
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    "events_error_spike" ->
-      """WITH h AS (SELECT date_trunc('hour', ts) AS hour,
-               CAST(COUNT(*) AS BIGINT) AS n_total,
-               CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_err
-             FROM events GROUP BY 1),
-         st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_hours,
-               CAST(SUM(n_err) AS BIGINT) AS s,
-               CAST(SUM(n_err * n_err) AS BIGINT) AS q FROM h),
-         z AS (SELECT h.*,
-               CAST(s AS DOUBLE) / CAST(n_hours AS DOUBLE) AS mean,
-               CAST(q AS DOUBLE) / CAST(n_hours AS DOUBLE)
-                 - (CAST(s AS DOUBLE) / CAST(n_hours AS DOUBLE))
-                   * (CAST(s AS DOUBLE) / CAST(n_hours AS DOUBLE)) AS var
-             FROM h, st)
-         SELECT hour, n_total, n_err,
-           round(CAST(n_err AS DOUBLE) / CAST(n_total AS DOUBLE), 6) AS err_rate_r,
-           round(CASE WHEN var > 0 THEN (CAST(n_err AS DOUBLE) - mean) / sqrt(var) ELSE 0 END, 6) AS z_r,
-           (CASE WHEN var > 0 THEN (CAST(n_err AS DOUBLE) - mean) / sqrt(var) ELSE 0 END) > 2.0 AS is_spike
-         FROM z ORDER BY hour""",
-    "events_attribution" ->
-      """WITH t AS (SELECT user_id, event_type,
-             last_value(CASE WHEN event_type <> 'purchase' THEN event_type END IGNORE NULLS)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS touch
-           FROM events)
-         SELECT coalesce(touch, 'direct') AS channel,
-           CAST(COUNT(*) AS BIGINT) AS n_purchases,
-           CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-         FROM t WHERE event_type = 'purchase'
-         GROUP BY 1 ORDER BY 1""",
-    "events_path_topk" ->
-      s"""WITH t AS (SELECT event_type,
-             lead(event_type, 1) OVER w AS t2,
-             lead(event_type, 2) OVER w AS t3
-           FROM events WHERE event_type IS NOT NULL
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-         SELECT event_type || '>' || t2 || '>' || t3 AS path,
-           CAST(COUNT(*) AS BIGINT) AS n
-         FROM t WHERE t3 IS NOT NULL
-         GROUP BY 1 ORDER BY n DESC, path LIMIT $PathTopN""",
-    "events_revenue_stats" ->
-      """SELECT coalesce(event_type, 'unknown') AS event_type,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(COUNT(value) AS BIGINT) AS n_value,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_v,
-           CAST(MIN(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS min_v,
-           CAST(MAX(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS max_v,
-           CASE WHEN COUNT(value) = 0 THEN NULL
-                ELSE round(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
-                       / CAST(COUNT(value) AS DOUBLE), 6) END AS mean_r
-         FROM events GROUP BY 1 ORDER BY 1""",
-    "events_props_keys" ->
-      """SELECT key, CAST(COUNT(*) AS BIGINT) AS n_events
-         FROM (SELECT unnest(list_distinct(json_keys(props))) AS key FROM events
-               WHERE props IS NOT NULL AND json_valid(props))
-         GROUP BY key ORDER BY key""",
-    "join_left_outer_enrich" ->
-      """WITH dim AS (SELECT c_custkey, c_name, c_mktsegment FROM customer
-               WHERE c_mktsegment IN ('BUILDING', 'AUTOMOBILE'))
-         SELECT o_orderkey, o_custkey,
-           coalesce(c_name, 'unknown') AS cust_name,
-           coalesce(c_mktsegment, '(none)') AS segment,
-           CAST(CASE WHEN c_custkey IS NULL THEN 0 ELSE 1 END AS INT) AS matched
-         FROM orders LEFT JOIN dim ON o_custkey = c_custkey
-         ORDER BY o_orderkey""",
-    // the refreshed-corpus twin (every 10th doc dropped, every 7th
-    // revised, one new crawl per ~nine standing at -(doc_id+1)) is
-    // doc_id arithmetic, reproduced verbatim in all three set-op
-    // oracles; content compared by md5 fingerprint as in the Spark side
-    "set_except_refresh" ->
-      """WITH refreshed AS (SELECT doc_id,
-               CASE WHEN doc_id % 7 = 0 THEN text || ' [rev2]' ELSE text END AS text
-             FROM documents WHERE doc_id % 10 <> 3
-             UNION ALL
-             SELECT -(doc_id + 1) AS doc_id, 'fresh crawl: ' || text AS text
-             FROM documents WHERE doc_id % 9 = 4)
-         SELECT doc_id FROM
-           (SELECT doc_id, md5(text) AS fp FROM documents
-            EXCEPT
-            SELECT doc_id, md5(text) AS fp FROM refreshed)
-         ORDER BY doc_id""",
-    "set_intersect_refresh" ->
-      """WITH refreshed AS (SELECT doc_id,
-               CASE WHEN doc_id % 7 = 0 THEN text || ' [rev2]' ELSE text END AS text
-             FROM documents WHERE doc_id % 10 <> 3
-             UNION ALL
-             SELECT -(doc_id + 1) AS doc_id, 'fresh crawl: ' || text AS text
-             FROM documents WHERE doc_id % 9 = 4)
-         SELECT doc_id FROM
-           (SELECT doc_id, md5(text) AS fp FROM documents
-            INTERSECT
-            SELECT doc_id, md5(text) AS fp FROM refreshed)
-         ORDER BY doc_id""",
-    "set_diff_refresh" ->
-      """WITH refreshed AS (SELECT doc_id,
-               CASE WHEN doc_id % 7 = 0 THEN text || ' [rev2]' ELSE text END AS text
-             FROM documents WHERE doc_id % 10 <> 3
-             UNION ALL
-             SELECT -(doc_id + 1) AS doc_id, 'fresh crawl: ' || text AS text
-             FROM documents WHERE doc_id % 9 = 4)
-         SELECT coalesce(a.doc_id, b.doc_id) AS doc_id,
-           CASE WHEN a.doc_id IS NULL THEN 'added'
-                WHEN b.doc_id IS NULL THEN 'dropped'
-                WHEN md5(a.text) IS NOT DISTINCT FROM md5(b.text)
-                  THEN 'unchanged'
-                ELSE 'changed' END AS status
-         FROM documents a FULL JOIN refreshed b ON a.doc_id = b.doc_id
-         ORDER BY doc_id""",
-    "set_union_refresh" ->
-      """WITH refreshed AS (SELECT doc_id,
-               CASE WHEN doc_id % 7 = 0 THEN text || ' [rev2]' ELSE text END AS text
-             FROM documents WHERE doc_id % 10 <> 3
-             UNION ALL
-             SELECT -(doc_id + 1) AS doc_id, 'fresh crawl: ' || text AS text
-             FROM documents WHERE doc_id % 9 = 4)
-         SELECT doc_id, fp FROM
-           (SELECT doc_id, md5(text) AS fp FROM documents
-            UNION
-            SELECT doc_id, md5(text) AS fp FROM refreshed)
-         ORDER BY doc_id, fp""",
-    "events_rollup" ->
-      """WITH rev AS (SELECT coalesce(event_type, 'unknown') AS event_type,
-               coalesce(CAST(CAST(ts AS DATE) AS VARCHAR), 'unknown') AS day,
-               CAST(value AS DECIMAL(18,6)) AS v
-             FROM events)
-         SELECT coalesce(event_type, '(all)') AS event_type,
-           coalesce(day, '(all)') AS day,
-           CAST(GROUPING(event_type) AS INT) AS g_type,
-           CAST(GROUPING(day) AS INT) AS g_day,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(v) AS DOUBLE) AS total_v
-         FROM rev GROUP BY ROLLUP(event_type, day)
-         ORDER BY g_type, g_day, event_type, day""",
-    "events_pivot" ->
-      """SELECT coalesce(CAST(CAST(ts AS DATE) AS VARCHAR), 'unknown') AS day,
-           CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS n_click,
-           CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error,
-           CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchase,
-           CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS n_signup,
-           CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS n_view,
-           CAST(COUNT(*) AS BIGINT) AS n_total
-         FROM events GROUP BY 1 ORDER BY 1""",
-    "q3_shipping_priority" ->
-      """SELECT l.l_orderkey, o.o_orderdate, o.o_orderpriority,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,6))
-             * (1 - CAST(l.l_discount AS DECIMAL(18,6)))) AS DOUBLE) AS revenue
-         FROM lineitem l
-         JOIN orders o ON l.l_orderkey = o.o_orderkey
-         JOIN customer c ON o.o_custkey = c.c_custkey
-         WHERE c.c_mktsegment = 'BUILDING'
-           AND o.o_orderdate < TIMESTAMP '1998-06-01'
-           AND l.l_shipdate > TIMESTAMP '1998-06-01'
-         GROUP BY 1, 2, 3
-         ORDER BY revenue DESC, l.l_orderkey LIMIT 10""",
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) * 1000000 AS BIGINT) AS sum_qty_micro,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) * 1000000 AS BIGINT) AS sum_base_price_micro,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-             * (1 - CAST(l_discount AS DECIMAL(4,2)))) * 1000000 AS BIGINT) AS sum_disc_price_micro,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-             * (1 - CAST(l_discount AS DECIMAL(4,2)))
-             * (1 + CAST(l_tax AS DECIMAL(4,2)))) * 1000000 AS BIGINT) AS sum_charge_micro,
-           CAST(COUNT(*) AS BIGINT) AS count_order,
-           CAST(round(CAST(SUM(CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE)
-             / COUNT(*) * 1000000, 0) AS BIGINT) AS avg_disc_micro
-         FROM lineitem
-         WHERE l_shipdate <= TIMESTAMP '2001-09-01'
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q18_large_volume" ->
-      """WITH big AS (SELECT l_orderkey,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) * 1000000 AS BIGINT) AS total_qty_micro
-             FROM lineitem GROUP BY 1
-             HAVING CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) * 1000000 AS BIGINT) > 250000000)
-         SELECT c.c_custkey, c.c_name, o.o_orderkey, o.o_orderdate,
-           b.total_qty_micro
-         FROM big b
-         JOIN orders o ON b.l_orderkey = o.o_orderkey
-         JOIN customer c ON o.o_custkey = c.c_custkey
-         ORDER BY b.total_qty_micro DESC, o.o_orderkey""",
-    "q4_order_priority" ->
-      """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS order_count
-         FROM orders o
-         WHERE EXISTS (SELECT 1 FROM lineitem l
-                       WHERE l.l_orderkey = o.o_orderkey
-                         AND l.l_shipdate > o.o_orderdate + INTERVAL 30 DAY)
-         GROUP BY 1 ORDER BY 1""",
-    "anti_churned_customers" ->
-      """SELECT c_custkey, c_name, c_mktsegment
-         FROM customer c
-         WHERE NOT EXISTS (SELECT 1 FROM orders o
-                           WHERE o.o_custkey = c.c_custkey
-                             AND o.o_orderdate > TIMESTAMP '2001-01-01')
-         ORDER BY c_custkey""",
-    "q17_small_quantity" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_small,
-           CAST(SUM(CAST(l1.l_extendedprice AS DECIMAL(12,2))) * 1000000 AS BIGINT) AS revenue_micro
-         FROM lineitem l1
-         WHERE CAST(l1.l_quantity AS BIGINT) * 5 *
-               (SELECT COUNT(*) FROM lineitem l2 WHERE l2.l_partkey = l1.l_partkey)
-             < (SELECT SUM(CAST(l_quantity AS BIGINT)) FROM lineitem l3
-                WHERE l3.l_partkey = l1.l_partkey)""",
   )
 }

@@ -2,10 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.streaming.GroupState
 
-/** The shared event-time scaffolding of every buffer-until-watermark
-  * stateful operator ([[AsOfJoin]], [[StreamingFunnel]],
-  * [[StreamingAttribution]]), single-sourced so the boundary
-  * conventions cannot drift between operators:
+/** The event-time scaffolding of the buffer-until-watermark stateful
+  * operator [[AsOfJoin]], its only user. The boundary conventions:
   *
   *  - timestamps are MICROSECONDS end-to-end (the parquet feed's grain);
   *  - a buffered row is ripe only when the watermark has STRICTLY
@@ -15,8 +13,8 @@ import org.apache.spark.sql.streaming.GroupState
   *    watermark's own millisecond — and the docs promise only that
   *    late rows are "expected, not guaranteed" to drop. The strict
   *    gate holds everything at-or-after wm, so both the admissible
-  *    tail and any not-guaranteed-dropped straggler still apply in
-  *    (ts, id) order before anything they precede is finalized;
+  *    tail and any not-guaranteed-dropped straggler still reach the
+  *    state before a probe they precede in event time is finalized;
   *  - batch mode (isStreaming = false) = complete input: the watermark
   *    is +∞ and everything flushes;
   *  - event-time timers re-arm past the earliest buffered event so a

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
@@ -27,10 +27,10 @@ import org.apache.spark.sql.Row
   *
   * The table root also holds the sink's own schema file (`_graft_schema`,
   * the data columns as Spark's JSON schema), written by every whole-table
-  * rewrite, the only path that can change the schema. A merge opens the
-  * table with it instead of inferring the schema with a footer-reading
-  * Spark job; a table without the file (one not written by this sink, or
-  * one whose file was removed) is inferred as before.
+  * rewrite, the only path that can change the schema. A merge and a read
+  * open the table with it instead of inferring the schema with a
+  * footer-reading Spark job; a table without the file (one not written by
+  * this sink, or one whose file was removed) is inferred as before.
   */
 object UpsertSink {
 
@@ -116,6 +116,12 @@ object UpsertSink {
   private def readSchemaFile(fs: FileSystem, target: Path): Option[StructType] =
     readSmallFile(fs, new Path(target, SchemaFile))
       .map(DataType.fromJson(_).asInstanceOf[StructType])
+
+  /** A reader for the table rooted at `root`: with its schema file where
+    * it has one, else one that infers the schema (a footer-reading job),
+    * as for a per-bucket `.bak` park. */
+  private def reader(spark: SparkSession, fs: FileSystem, root: Path): DataFrameReader =
+    readSchemaFile(fs, root).fold(spark.read)(spark.read.schema)
 
   /** Hook for tests: invoked between a bucket's rename-out and rename-in
     * during the per-bucket swap, so a concurrent-reader test can observe
@@ -324,7 +330,12 @@ object UpsertSink {
     * the retry re-lists onto the post-swap layout. The materialized
     * snapshot lives in executor storage — the price of a consistent
     * read in the parquet harness (production = a MERGE-capable table
-    * format with real snapshot isolation). */
+    * format with real snapshot isolation).
+    *
+    * The directory read is opened with its own schema file, so a read of
+    * a sink-written table runs its materialization job and no inference
+    * job; a directory without the file (a per-bucket `.bak` park) is
+    * inferred. */
   def readKeyedTable(spark: SparkSession, path: String): Option[DataFrame] = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val target = new Path(path)
@@ -342,21 +353,23 @@ object UpsertSink {
             // cleanup) — read it; otherwise the park IS the table. Never
             // union the two: the park carries the old bucket layout.
             if (fs.exists(target) && hasData(fs, target))
-              Some(dropBucket(spark.read.parquet(path).localCheckpoint()))
+              Some(dropBucket(reader(spark, fs, target).parquet(path).localCheckpoint()))
             else if (hasData(fs, bakFull))
-              Some(dropBucket(spark.read.parquet(bakFull.toString).localCheckpoint()))
+              Some(dropBucket(reader(spark, fs, bakFull).parquet(bakFull.toString)
+                .localCheckpoint()))
             else None
           } else if (!fs.exists(bakRoot)) {
             // no swap in flight at the CHECK — but one may start before
             // the caller's first action, so materialize here too: the
             // snapshot contract is a consistent frame, not a lazy plan
             if (hasData(fs, target))
-              Some(dropBucket(spark.read.parquet(path).localCheckpoint()))
+              Some(dropBucket(reader(spark, fs, target).parquet(path).localCheckpoint()))
             else None
           } else if (!fs.exists(target)) {
             // whole-table swap died after target->bak: bak IS the table
             if (hasData(fs, bakRoot))
-              Some(dropBucket(spark.read.parquet(bakRoot.toString).localCheckpoint()))
+              Some(dropBucket(reader(spark, fs, bakRoot).parquet(bakRoot.toString)
+                .localCheckpoint()))
             else None
           } else {
             val tgtDirs = fs.listStatus(target).map(_.getPath)
@@ -368,8 +381,10 @@ object UpsertSink {
             if (dirs.isEmpty) None
             // reading concrete bucket dirs skips partition discovery, so
             // the frame comes back without the bucket column — exactly
-            // this method's contract. Eager localCheckpoint: see doc.
-            else Some(spark.read.parquet(dirs: _*).localCheckpoint())
+            // this method's contract. A per-bucket swap never changes the
+            // schema, so the target's schema file covers the parked
+            // buckets too. Eager localCheckpoint: see doc.
+            else Some(reader(spark, fs, target).parquet(dirs: _*).localCheckpoint())
           }
         }
       } catch {
@@ -436,7 +451,7 @@ object UpsertSink {
       }
     }
     if (!hasData(fs, target)) None
-    else Some(readSchemaFile(fs, target).fold(spark.read)(spark.read.schema).parquet(path))
+    else Some(reader(spark, fs, target).parquet(path))
   }
 
   /** Attach the upsert sink to a streaming changelog. */

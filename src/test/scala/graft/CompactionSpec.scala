@@ -85,26 +85,30 @@ class CompactionSpec extends SparkSpec {
 
   test("crash between the swap renames self-heals at the next compaction entry") {
     val dir = java.nio.file.Files.createTempDirectory("graft_cmp_crash").toString
-    val refreshed = graft.ops.RefOps.refreshedDocs(spark, sf)
-    streaming.SetDiffIngest.buildFpIndex(spark, docs2, dir)
-    (0 to 1).foreach(i => streaming.SetDiffIngest.processBatch(
-      spark, dir, refreshed.where(pmod(col("doc_id"), lit(2)) === i), i.toLong))
-    val before = streaming.SetDiffIngest.diffFromDir(spark, dir).collect().toSeq
+    val odds = docs2.where(col("doc_id") % 2 === 1)
+    def fold() = streaming.MinhashDedupIngest
+      .decisionsFromDir(spark, dir).orderBy("doc_id").collect().toSeq
+    streaming.MinhashDedupIngest.buildBandIndex(
+      spark, docs2.where(col("doc_id") % 2 === 0), dir)
+    (0 to 1).foreach(i => streaming.MinhashDedupIngest.processBatch(
+      spark, dir, odds.where(pmod(col("doc_id"), lit(4)) === 2 * i + 1), i.toLong))
+    val before = fold()
+    assert(before.nonEmpty)
     // simulate the crash window: the live log parked at .old, nothing
     // at the store path (died after rename 1, before rename 2)
     val decisions = java.nio.file.Paths.get(dir, "decisions")
     java.nio.file.Files.move(decisions, java.nio.file.Paths.get(dir, "decisions.old"))
     assert(!java.nio.file.Files.exists(decisions))
     // the next compaction heals the window, then folds normally
-    streaming.SetDiffIngest.compact(spark, dir)
-    assert(streaming.SetDiffIngest.diffFromDir(spark, dir).collect().toSeq == before,
+    streaming.MinhashDedupIngest.compact(spark, dir)
+    assert(fold() == before,
       "recovery + compaction must reproduce the pre-crash fold")
     // healthy store: recovery is a no-op and reports it
     assert(!streaming.IndexCompaction.recoverIfInterrupted(spark, decisions.toString))
     // manual reader-side recovery works too (window re-simulated)
     java.nio.file.Files.move(decisions, java.nio.file.Paths.get(dir, "decisions.old"))
     assert(streaming.IndexCompaction.recoverIfInterrupted(spark, decisions.toString))
-    assert(streaming.SetDiffIngest.diffFromDir(spark, dir).collect().toSeq == before)
+    assert(fold() == before)
   }
 
   test("minhash band index: compaction is probe- and decision-invariant and shrinks the log") {
@@ -143,23 +147,6 @@ class CompactionSpec extends SparkSpec {
     streaming.MinhashDedupIngest.processBatch(
       spark, dirA, odds.where(col("doc_id") % 5 === 0), 2L)
     assert(decisions(dirA) == decisions(dirB))
-  }
-
-  test("set-diff decision log: compaction is ledger-invariant and shrinks the log") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cmp_sd").toString
-    val refreshed = graft.ops.RefOps.refreshedDocs(spark, sf)
-    streaming.SetDiffIngest.buildFpIndex(spark, docs2, dir)
-    (0 to 2).foreach(i => streaming.SetDiffIngest.processBatch(
-      spark, dir, refreshed.where(pmod(col("doc_id"), lit(3)) === i), i.toLong))
-    val before = streaming.SetDiffIngest.diffFromDir(spark, dir).collect().toSeq
-    val filesBefore = files(s"$dir/decisions")
-    streaming.SetDiffIngest.compact(spark, dir)
-    assert(streaming.SetDiffIngest.diffFromDir(spark, dir).collect().toSeq == before)
-    assert(files(s"$dir/decisions") < filesBefore)
-    // a post-compaction redelivery of the last batch is still invisible
-    streaming.SetDiffIngest.processBatch(
-      spark, dir, refreshed.where(pmod(col("doc_id"), lit(3)) === 2), 2L)
-    assert(streaming.SetDiffIngest.diffFromDir(spark, dir).collect().toSeq == before)
   }
 
   test("join-bloom word log: compaction is probe-invariant and shrinks the log") {

@@ -164,13 +164,6 @@ class CorruptInputSpec extends SparkSpec {
       s"the all-Inf vector must never rank as a neighbor, got ${top.toSeq}")
   }
 
-  test("duplicate-key props count the key once and never kill the stage") {
-    val keys = LegacyEntry.queries("events_props_keys")(spark, dir)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(keys("dup") == 1L, s"duplicate key must count once per event: $keys")
-    assert(keys("k") == 5L, s"clean keys must all survive: $keys")
-  }
-
   test("null n_chars stays out of the quantile CDF") {
     // a null bucket sorts NULLS FIRST in Spark's window but NULLS LAST
     // in DuckDB's — excluded up front, the CDF sees only observed
@@ -180,28 +173,6 @@ class CorruptInputSpec extends SparkSpec {
       .collect().map(r => r.getDouble(0) -> r.getLong(1)).toMap
     assert(q == Map(0.5 -> 5L, 0.9 -> 69L, 0.99 -> 69L),
       s"quantiles must be over non-null lengths only, got $q")
-  }
-
-  test("null-typed events vanish identically from the path trigrams") {
-    // Spark's concat_ws SKIPS a null inside a trigram while SQL's ||
-    // nulls the whole path — both sides now filter null-typed events
-    // before the window, so adjacency skips over them consistently
-    val paths = LegacyEntry.queries("events_path_topk")(spark, dir)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(paths == Map("view>click>purchase" -> 1L),
-      s"null-typed events must be invisible to adjacency, got $paths")
-  }
-
-  test("revenue stats: null types bucket as 'unknown', null values never dilute the mean") {
-    val rows = LegacyEntry.queries("events_revenue_stats")(spark, dir)
-      .collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
-        if (r.isNullAt(6)) None else Some(r.getDouble(6)))).toMap
-    // two null-typed rows (one with revenue, one fully null): the mean
-    // is over the ONE observed value, not diluted by the null
-    assert(rows("unknown") == ((3L, 2L, Some(1.0))),
-      s"unknown bucket must count 3 rows, 2 observed values, mean 1.0: ${rows("unknown")}")
-    assert(rows("purchase") == ((1L, 1L, Some(1.0))), rows.toString)
   }
 
   test("clean rows still dedup across the corrupt neighbors") {

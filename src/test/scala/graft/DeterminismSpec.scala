@@ -20,19 +20,11 @@ class DeterminismSpec extends SparkSpec {
     "sim_q8_topk",          // rank window + partition-local top-k
     "dedup_minhash_estimate", // multi-join over checkpointed inputs
     "dedup_semantic_cluster", // CC fixpoint over the cosine pair graph
-    "events_funnel",        // chained min-aggs with left joins
-    "events_sessionize",    // lag window + running sum
-    "events_attribution",   // running last() over the user window
-    "events_path_topk",     // lead window + desc-count top-k (tie-broken)
     "corpus_quantiles",     // histogram CDF under one single-partition window
     "vocab_bpe_pairs",      // two-phase top-k (tie-broken by pair)
     "dedup_keep_best",      // CC fixpoint + min(struct) keeper election
     "dedup_embedding_incremental", // parity-cut LSH candidates + agg
-    "events_revenue_stats", // decimal sums — THE order-independence claim
-    "events_props_keys",    // json key histogram
     "sample_temperature",   // integer-weight Σw_s — THE order-exact claim
-    "agg_hop_count",        // dual map-side window assignment
-    "agg_cumulate_count",   // step agg + explode re-agg
     "events_unique_users_kmv", // k-th min over distinct hashes (unique → total order)
     "dedup_simhash_cluster", // CC fixpoint over the hamming pair graph
     "sim_pq_topk",          // Lloyd sorted folds + ADC shortlist + rescore rank

@@ -51,12 +51,10 @@ class EmptyInputSpec extends SparkSpec {
     "corpus_quantiles", "vocab_bpe_pairs", "text_ngram_topk",
     "text_quality_score", "text_token_count", "text_fingerprint",
     "sample_split_hash", "sample_stratified", "corpus_mix", "corpus_stats",
-    "sample_temperature", "text_entropy", "agg_hop_count", "agg_cumulate_count",
+    "sample_temperature", "text_entropy",
     "pack_sequences", "corpus_curate", "emb_quantize_int8", "sim_brute_topk",
     "sim_lsh_topk", "emb_quantize_binary", "sim_binary_topk",
-    "events_sessionize", "events_funnel", "events_retention",
-    "events_attribution", "events_path_topk", "events_revenue_stats",
-    "events_props_keys", "mm_frame_sample",
+    "mm_frame_sample",
     "text_bm25_topk", "text_bm25_eval", "text_tfidf_topterms",
     "sim_hybrid_rrf", "events_zorder_layout", "events_zorder_prune_eval",
     "chunk_bm25_topk", "events_zorder_incremental", "sim_mrl_eval", "corpus_source_cap",
@@ -82,7 +80,7 @@ class EmptyInputSpec extends SparkSpec {
   /** Aggregate-shaped ops: one (or per-check) row of zero counts is the
     * correct empty-corpus answer — they must run, not throw. */
   private val runsOnly = Seq("vocab_kmv", "events_unique_users_kmv",
-    "corpus_expectations", "events_error_spike", "dedup_substring_eval",
+    "corpus_expectations", "dedup_substring_eval",
     "corpus_drift", "mm_image_neardup_eval", "mm_audio_neardup_eval",
     "mm_video_neardup_eval",
     "quality_classifier_train", "quality_classifier_eval",

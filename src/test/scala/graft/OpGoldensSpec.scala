@@ -151,35 +151,6 @@ class OpGoldensSpec extends SparkSpec {
     assert(expr.nonEmpty)
   }
 
-  test("hop windows: null event_type buckets, null ts drops — in both engines' shared semantics") {
-    // the corrupt gauntlet pins no-throw only; this pins the SHAPE: a
-    // null-ts event must vanish (the guard both engines spell out) and
-    // a null-typed event must keep its own window groups
-    val d = java.nio.file.Files.createTempDirectory("graft_goldens_ev").toString
-    val evSchema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", LongType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    val h = 3_600_000_000_000L // one hour in nanos
-    val base = 1_700_000_000_000_000_000L - (1_700_000_000_000_000_000L % h) // whole hour
-    val evs = Seq(
-      Row(1L, base, 7L, "view", 1.0, "{}"),
-      Row(2L, null, 7L, "view", 1.0, "{}"),       // null ts: dropped
-      Row(3L, base + h, 7L, null, 1.0, "{}"))     // null type: own bucket
-    spark.createDataFrame(
-      new java.util.ArrayList[Row](scala.jdk.CollectionConverters.SeqHasAsJava(evs).asJava),
-      evSchema).write.parquet(s"$d/events.parquet")
-    val got = ops.RefOps.queries("agg_hop_count")(spark, d).collect()
-      .map(r => (if (r.isNullAt(0)) "<null>" else r.getString(0),
-        r.getTimestamp(1).getTime * 1000L) -> r.getLong(2)).toMap
-    val baseUs = base / 1000L
-    val hUs = h / 1000L
-    assert(got == Map(
-      ("view", baseUs - hUs) -> 1L, ("view", baseUs) -> 1L,
-      ("<null>", baseUs) -> 1L, ("<null>", baseUs + hUs) -> 1L),
-      s"hop over the corrupt shapes: $got")
-  }
-
   test("sample_temperature: capped small sources keep everything, the big source thins") {
     // sources 90/9/1: w = (9.487k, 3k, 1k scaled), target = 50 →
     // rate_A = 50·(√90/Σ√n)/90 ≈ 0.39, rate_B ≈ 1.24 → capped 1,

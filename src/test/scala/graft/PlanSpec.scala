@@ -186,46 +186,6 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("partial_count"), plan)
   }
 
-  test("agg_hop_count: dual window assignment is map-side (one partial-agg exchange)") {
-    val plan = finalPlan(graft.ops.RefOps.queries("agg_hop_count")(spark, d))
-    // both window assignments must land in the partial aggregate below
-    // the one hash exchange — the shuffle carries (type, window)
-    // partials, never 2× the event rows. Count in the final section
-    // only: the AQE toString repeats the plan under "== Initial Plan =="
-    val fin = plan.split("== Initial Plan ==")(0)
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(fin).length
-    assert(exchanges == 1, s"hop must shuffle once, on window partials:\n$plan")
-    assert(fin.indexOf("partial_count") > fin.indexOf("Exchange hashpartitioning"), plan)
-    assert(fin.contains("Expand"), plan) // the dual assignment operator itself
-  }
-
-  test("agg_cumulate_count: the explode sits above the step aggregate, never on events") {
-    val plan = finalPlan(graft.ops.RefOps.queries("agg_cumulate_count")(spark, d))
-    // the cumulate expansion (Generate) must consume the tiny finalized
-    // (type, step) frame — i.e. appear ABOVE the step aggregate's
-    // partial/final pair — or the explode multiplies the event stream
-    val gen = plan.indexOf("Generate explode")
-    val partial = plan.indexOf("partial_count")
-    assert(gen >= 0 && partial > gen,
-      s"explode must run on the aggregated step frame, not the events:\n$plan")
-  }
-
-  test("events_retention: activity collapses to distinct (user, day) BEFORE the cohort join") {
-    val plan = finalPlan(graft.ops.RefOps.queries("events_retention")(spark, d))
-    // the distinct must partial-aggregate below its exchange so the join
-    // input is |users|·|days|, never |events| — the no-power-user-skew claim
-    val firstJoin = plan.indexOf("Join")
-    val distinctAgg = plan.indexOf("HashAggregate(keys=[user_id")
-    assert(firstJoin >= 0 && distinctAgg > firstJoin,
-      s"distinct (user, day) must sit below the cohort join:\n$plan")
-    assert(plan.contains("partial_count"), plan) // final (cohort, offset) combine
-    // both scans pruned to the two referenced columns (ts's physical type
-    // varies by harness vintage — nanos-long, timestamp_ntz, or UTC-flagged
-    // timestamp; the pin is about PRUNING, not the type)
-    assert("ReadSchema: struct<ts:(bigint|timestamp_ntz|timestamp),user_id:bigint>".r
-      .findAllIn(plan).size >= 2, plan)
-  }
-
   test("sim_pq_topk: ADC scoring is broadcast-joined, never a corpus-side shuffle") {
     val plan = finalPlan(graft.ops.SimOps.queries("sim_pq_topk")(spark, d))
     // the codes x LUT pairing has no equi-key (vec_id <> q_id), so the
@@ -418,19 +378,6 @@ class PlanSpec extends SparkSpec {
     // side never shuffles to discover what the filter already knows
     assert("BroadcastHashJoin".r.findAllIn(plan).size >= 2, plan)
     assert(!plan.contains("CartesianProduct"), plan)
-  }
-
-  test("events attribution/paths: one user_id window pass feeding a tiny-key aggregate") {
-    for (name <- Seq("events_attribution", "events_path_topk")) {
-      val plan = finalPlan(graft.ops.RefOps.queries(name)(spark, d))
-      // exactly one user_id exchange for the window; the channel/path
-      // rollup partial-aggregates map-side above it. Count only the AQE
-      // final section — toString repeats the shapes under "Initial Plan".
-      val finalOnly = plan.split("== Initial Plan ==").head
-      assert("Exchange hashpartitioning\\(user_id".r.findAllIn(finalOnly).size == 1,
-        s"$name must shuffle event data once (the window pass):\n$plan")
-      assert(finalOnly.contains("partial_count"), plan)
-    }
   }
 
   test("text_unigram_nll: aggregated probe frame, broadcast model, no cartesian beyond totals") {
@@ -787,179 +734,6 @@ class PlanSpec extends SparkSpec {
       s"the per-source cut must prune per-partition before the shuffle:\n$plan")
   }
 
-  test("q1_pricing_summary: one pruned lineitem scan feeds the partial fold; one group exchange") {
-    val plan = finalPlan(
-      graft.ops.RefOps.queries("q1_pricing_summary")(spark, d))
-    val finalOnly = plan.split("== Initial Plan ==").head
-    // scan-bound shape: exactly ONE fact scan — the 6 aggregates fold in
-    // a single pass, never a per-aggregate re-scan
-    assert(finalOnly.linesIterator.count(_.contains("Scan parquet")) == 1,
-      s"Q1 must read lineitem exactly once:\n$plan")
-    // the date cut reaches the reader...
-    assert(finalOnly.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"),
-      s"the shipdate predicate must reach the scan:\n$plan")
-    // ...and columns not aggregated are pruned there (100 TB cost is
-    // scan bandwidth; reading l_orderkey/l_comment would be paying for
-    // bytes the query never touches)
-    val readSchema = finalOnly.linesIterator.find(_.contains("ReadSchema:")).getOrElse("")
-    assert(readSchema.contains("l_returnflag") && !readSchema.contains("l_orderkey") &&
-      !readSchema.contains("l_comment"),
-      s"the reader must prune to the 7 referenced columns:\n$readSchema")
-    // map-side combine, then exactly one hash exchange on the group keys
-    // (the trailing sort's range exchange moves 6 rows; the group
-    // exchange is the only one that sees data)
-    assert(finalOnly.contains("partial_sum"),
-      s"the 6-aggregate fold must combine map-side:\n$plan")
-    assert(finalOnly.linesIterator.count(_.contains("Exchange hashpartitioning")) == 1,
-      s"one group-key exchange only:\n$plan")
-  }
-
-  test("q17_small_quantity: decorrelated to ONE equi-join — no cartesian, no per-row subquery") {
-    val plan = finalPlan(
-      graft.ops.RefOps.queries("q17_small_quantity")(spark, d))
-    val finalOnly = plan.split("== Initial Plan ==").head
-    val joins = finalOnly.linesIterator.count(l =>
-      l.contains("SortMergeJoin") || l.contains("BroadcastHashJoin") ||
-        l.contains("ShuffledHashJoin"))
-    assert(joins == 1,
-      s"the correlated aggregate must decorrelate to exactly one equi-join, saw $joins:\n$plan")
-    assert(!finalOnly.contains("CartesianProduct") &&
-      !finalOnly.contains("BroadcastNestedLoopJoin"),
-      s"no per-row subquery execution:\n$plan")
-    // the per-part (sum, count) stats combine map-side before their exchange
-    assert(finalOnly.contains("partial_sum"), plan)
-  }
-
-  test("q18_large_volume: lineitem aggregates BEFORE any join (dims join the qualifying frame, never the fact)") {
-    val plan = finalPlan(
-      graft.ops.RefOps.queries("q18_large_volume")(spark, d))
-    val finalOnly = plan.split("== Initial Plan ==").head
-    val lines = finalOnly.linesIterator.toSeq
-    // tree text prints ancestors above descendants: the lineitem scan's
-    // NEAREST enclosing operator chain must hit the HashAggregate before
-    // any join — i.e. the last aggregate printed above the l_quantity
-    // scan sits BELOW (after) the last join printed above it
-    val scanIdx = lines.indexWhere(l => l.contains("Scan parquet") && l.contains("l_quantity"))
-    assert(scanIdx >= 0, s"no lineitem scan found:\n$plan")
-    val lastAggAbove = lines.take(scanIdx).lastIndexWhere(_.contains("HashAggregate"))
-    val lastJoinAbove = lines.take(scanIdx).lastIndexWhere(l =>
-      l.contains("Join") && !l.contains("ReusedExchange"))
-    assert(lastAggAbove >= 0, s"lineitem must feed a HashAggregate:\n$plan")
-    assert(lastJoinAbove < lastAggAbove,
-      s"the fact must aggregate to qualifying keys BEFORE joining dims:\n$plan")
-    assert(finalOnly.contains("partial_sum"),
-      s"the per-order quantity sum must combine map-side:\n$plan")
-    assert(!finalOnly.contains("CartesianProduct"), plan)
-  }
-
-  test("q3_shipping_priority: pushed date/segment filters, broadcast dim, partial agg, heap top-k") {
-    val plan = finalPlan(
-      graft.ops.RefOps.queries("q3_shipping_priority")(spark, d))
-    val finalOnly = plan.split("== Initial Plan ==").head
-    assert(finalOnly.contains("PushedFilters: [") &&
-      finalOnly.contains("IsNotNull(c_mktsegment)"),
-      s"the segment filter must reach the customer scan:\n$plan")
-    assert(finalOnly.contains("BroadcastHashJoin"),
-      s"the filtered customer dim must broadcast:\n$plan")
-    assert(finalOnly.contains("partial_sum"),
-      s"revenue must combine map-side:\n$plan")
-    assert(finalOnly.contains("TakeOrderedAndProject"),
-      s"the top-10 must be per-partition heaps, not a global sort:\n$plan")
-  }
-
-  test("q4_order_priority: EXISTS runs as LeftSemi with the late predicate inside the join") {
-    val plan = finalPlan(graft.ops.RefOps.queries("q4_order_priority")(spark, d))
-    val finalOnly = plan.split("== Initial Plan ==").head
-    assert(finalOnly.contains("LeftSemi"),
-      s"EXISTS must not materialize match multiplicity:\n$plan")
-  }
-
-  test("anti_churned_customers: NOT EXISTS runs as LeftAnti; date filter pushed to the orders scan") {
-    val plan = finalPlan(graft.ops.RefOps.queries("anti_churned_customers")(spark, d))
-    val finalOnly = plan.split("== Initial Plan ==").head
-    assert(finalOnly.contains("LeftAnti"), plan)
-    assert(finalOnly.contains("PushedFilters: [IsNotNull(o_orderdate), GreaterThan(o_orderdate"),
-      s"the activity cut must reach the orders scan:\n$plan")
-  }
-
-  test("join_left_outer_enrich: LeftOuter broadcast — the fact side never shuffles") {
-    val plan = finalPlan(
-      graft.ops.RefOps.queries("join_left_outer_enrich")(spark, d))
-    val finalOnly = plan.split("== Initial Plan ==").head
-    assert(finalOnly.contains("BroadcastHashJoin") && finalOnly.contains("LeftOuter"),
-      s"the incomplete dim must broadcast into a LeftOuter join:\n$plan")
-    // only the broadcast exchange and the final sort's range exchange
-    // may appear — a hash exchange would mean the fact shuffled
-    assert(!finalOnly.contains("Exchange hashpartitioning"),
-      s"the fact side must not shuffle for a broadcast enrichment:\n$plan")
-    // the segment snapshot filter reaches the dim scan
-    assert(finalOnly.contains("In(c_mktsegment"),
-      s"the snapshot filter must reach the customer scan:\n$plan")
-  }
-
-  test("set_diff_refresh: one FullOuter equi-join over fingerprint projections, no cartesian") {
-    val plan = finalPlan(graft.ops.RefOps.queries("set_diff_refresh")(spark, d))
-    val finalOnly = plan.split("== Initial Plan ==").head
-    assert(finalOnly.contains("FullOuter"),
-      s"the diff must preserve both sides (FULL OUTER):\n$plan")
-    assert(!finalOnly.contains("CartesianProduct"), plan)
-    // the 100 TB discipline: document bodies never reach the join —
-    // both sides reduce to (doc_id, 32-hex-char md5) before shuffling.
-    // Position-checked, not just contains: tree text prints ancestors
-    // above descendants (the q18 precedent), so every md5 projection
-    // must print BELOW the FullOuter join line — an md5 computed above
-    // the join would mean full text shuffled through it.
-    val lines = finalOnly.linesIterator.toSeq
-    val joinIdx = lines.indexWhere(_.contains("FullOuter"))
-    val md5Idxs = lines.zipWithIndex.collect {
-      case (l, i) if l.contains("md5(") => i }
-    assert(md5Idxs.nonEmpty,
-      s"fingerprints must be computed below the join:\n$plan")
-    assert(md5Idxs.forall(_ > joinIdx),
-      s"md5 fingerprint projections must sit in the join's child subtrees, not above it:\n$plan")
-  }
-
-  test("set_except_refresh: EXCEPT plans as LeftAnti + distinct aggregate, no cartesian") {
-    val plan = finalPlan(graft.ops.RefOps.queries("set_except_refresh")(spark, d))
-    val finalOnly = plan.split("== Initial Plan ==").head
-    assert(finalOnly.contains("LeftAnti"),
-      s"EXCEPT must set-subtract as an anti join:\n$plan")
-    assert(finalOnly.contains("HashAggregate"),
-      s"EXCEPT DISTINCT needs its dedup aggregate:\n$plan")
-    assert(!finalOnly.contains("CartesianProduct"), plan)
-  }
-
-  test("set_intersect_refresh: INTERSECT plans as LeftSemi + distinct aggregate, no cartesian") {
-    val plan = finalPlan(graft.ops.RefOps.queries("set_intersect_refresh")(spark, d))
-    val finalOnly = plan.split("== Initial Plan ==").head
-    assert(finalOnly.contains("LeftSemi"),
-      s"INTERSECT must membership-probe as a semi join:\n$plan")
-    assert(finalOnly.contains("HashAggregate"),
-      s"INTERSECT DISTINCT needs its dedup aggregate:\n$plan")
-    assert(!finalOnly.contains("CartesianProduct"), plan)
-  }
-
-  test("set_union_refresh: UNION DISTINCT plans as Union + one distinct aggregate, no join") {
-    val plan = finalPlan(graft.ops.RefOps.queries("set_union_refresh")(spark, d))
-    val finalOnly = plan.split("== Initial Plan ==").head
-    assert(finalOnly.contains("Union"),
-      s"the merge must be a Union, not a join:\n$plan")
-    assert(finalOnly.contains("HashAggregate"),
-      s"UNION DISTINCT needs its dedup aggregate:\n$plan")
-    assert(!finalOnly.contains("Join") || finalOnly.linesIterator
-      .filter(_.contains("Join")).forall(_.contains("ReusedExchange")),
-      s"no join may appear in a pure set union:\n$plan")
-    assert(!finalOnly.contains("CartesianProduct"), plan)
-    // fingerprints below the Union: the distinct shuffle keys on
-    // (doc_id, 32-hex md5), never document bodies
-    val lines = finalOnly.linesIterator.toSeq
-    val unionIdx = lines.indexWhere(_.contains("Union"))
-    val md5Idxs = lines.zipWithIndex.collect {
-      case (l, i) if l.contains("md5(") => i }
-    assert(md5Idxs.nonEmpty && md5Idxs.forall(_ > unionIdx),
-      s"md5 projections must sit below the Union:\n$plan")
-  }
-
   test("corpus_governance_cube: all 8 grouping sets in ONE Expand pass, partial agg, one scan") {
     val plan = finalPlan(
       graft.ops.PipelineOps.queries("corpus_governance_cube")(spark, d))
@@ -970,26 +744,6 @@ class PlanSpec extends SparkSpec {
       s"the cubed aggregate must combine map-side before the exchange:\n$plan")
     assert(finalOnly.linesIterator.count(_.contains("Scan parquet")) <= 1,
       s"cube must not re-scan per grouping set:\n$plan")
-    assert(!finalOnly.contains("CartesianProduct"), plan)
-  }
-
-  test("events_rollup: one Expand + one partial-agg exchange, no per-level re-scan") {
-    val plan = finalPlan(graft.ops.RefOps.queries("events_rollup")(spark, d))
-    val finalOnly = plan.split("== Initial Plan ==").head
-    assert(finalOnly.contains("Expand"),
-      s"rollup must expand grouping sets in one pass, not re-scan per level:\n$plan")
-    assert(finalOnly.contains("partial_count") || finalOnly.contains("partial_sum"),
-      s"the grouped aggregate must combine map-side:\n$plan")
-    // exactly one scan of the events table feeds the rollup
-    assert(finalOnly.linesIterator.count(_.contains("Scan parquet")) <= 1,
-      s"rollup must not re-scan per grouping level:\n$plan")
-  }
-
-  test("events_pivot: explicit-values pivot stays one map-side aggregation (no distinct pre-scan)") {
-    val plan = finalPlan(graft.ops.RefOps.queries("events_pivot")(spark, d))
-    val finalOnly = plan.split("== Initial Plan ==").head
-    assert(finalOnly.contains("partial_"),
-      s"the pivot cells must fold map-side:\n$plan")
     assert(!finalOnly.contains("CartesianProduct"), plan)
   }
 

@@ -40,67 +40,6 @@ class SkewSpec extends SparkSpec {
     }
   }
 
-  test("events_funnel: AQE skew split fires on a power-user key; results match the unsplit run") {
-    // the funnel's three user-keyed joins concentrate a power user's
-    // type-filtered events into single join partitions — the skew shape
-    // one user with 10^6 events produces at 100 TB. Pin that (a) AQE's
-    // runtime split actually fires on the funnel's OWN executed plan,
-    // and (b) splitting changes nothing about the answer.
-    val tmp = java.nio.file.Files.createTempDirectory("funnel_skew").toFile
-    val restore = Seq(
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.forceOptimizeSkewedJoin",
-      "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      // one power user (5/7 of all events) + a uniform tail; ts strictly
-      // increasing with id so every funnel stage exists for most users
-      // (the user modulus 7 is coprime to the type modulus 3, so tail
-      // users see all three event types). Written as events.parquet (ts
-      // in nanos) so the spec runs the REGISTERED operator through the
-      // real Tables.events loader.
-      spark.range(60000).selectExpr(
-          "id AS event_id",
-          "CAST(CASE WHEN id % 7 < 5 THEN 0 ELSE 1 + id % 997 END AS BIGINT) AS user_id",
-          "CASE WHEN id % 3 = 0 THEN 'view' WHEN id % 3 = 1 THEN 'click' ELSE 'purchase' END AS event_type",
-          "1700000000000000000 + id * 1000000000 AS ts")
-        .write.mode("overwrite").parquet(tmp.getPath + "/events.parquet")
-      def run(): (Seq[org.apache.spark.sql.Row], String) = {
-        val df = ops.RefOps.queries("events_funnel")(spark, tmp.getPath)
-        val rows = df.collect().toSeq
-        (rows, df.queryExecution.executedPlan.toString)
-      }
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-      val (direct, _) = run()
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16KB")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8KB")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      // the funnel fuses each join with its per-user min-aggregate, so
-      // splitting a skewed partition would break the aggregate's required
-      // distribution and AQE declines BY DEFAULT; forceOptimizeSkewedJoin
-      // opts into the extra exchange — the right trade when one user
-      // holds a multi-GB partition (documented on the operator)
-      spark.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-      val (split, plan) = run()
-      assert(plan.contains("skew=true"),
-        s"AQE skew split did not fire on the funnel plan:\n$plan")
-      assert(split == direct, "skew-split funnel diverged from the direct run")
-      assert(direct.count(_.getLong(0) == 0L) == 1 && direct.size > 900,
-        "fixture sanity: power user present, tail users funneled")
-    } finally {
-      restore.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-      org.apache.commons.io.FileUtils.deleteDirectory(tmp)
-    }
-  }
-
   test("salted two-phase aggregation == direct aggregation on a hot key") {
     // AQE cannot split a hot KEY inside an aggregation (all rows of a key
     // must meet). The salting pattern bounds per-task state instead:

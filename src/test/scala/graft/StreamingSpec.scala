@@ -479,6 +479,23 @@ class StreamingSpec extends SparkSpec {
     assert(table() == want + (9 -> ("V9NEW", Some("warm"))))
   }
 
+  test("a keyed-table read opens the table with its stored schema: one job fewer than inference") {
+    val dir = Files.createTempDirectory("read_schema").toString + "/table"
+    UpsertSink.mergeBatch(
+      spark.range(100).selectExpr("CAST(id AS INT) AS id", "concat('v', id) AS v", "id AS ver"),
+      Seq("id"), "ver", dir)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "v", "ver").collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSet
+    // the same read with the schema inferred from the files' footers
+    val (inferred, inferredJobs) = scheduled(
+      spark.read.parquet(dir).drop("graft_bucket").localCheckpoint())
+    val (read, readJobs) = scheduled(UpsertSink.readKeyedTable(spark, dir).get)
+    assert(readJobs.jobs == inferredJobs.jobs - 1,
+      s"jobs submitted: $readJobs, inferring: $inferredJobs")
+    assert(read.columns.toSeq == inferred.columns.toSeq)
+    assert(rows(read) == rows(inferred) && rows(read).size == 100)
+  }
+
   test("crashed full rewrite: old-layout park is restored or discarded, never merged") {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
@@ -1105,103 +1122,57 @@ class StreamingSpec extends SparkSpec {
     // Measured Spark boundary (this test IS the measurement the
     // EventTimeOps doc cites): the stateful late filter drops rows with
     // ts <= watermark but ADMITS the µs tail (wm, wm+999] of the
-    // watermark's own millisecond. Two guarantees pinned here:
-    //  (a) an event at ts == wm is NOT flushed while the watermark sits
-    //      on it (the pre-fix <= gate emitted it one batch early);
-    //  (b) a touch landing in the admitted µs tail AFTER later events
-    //      already arrived still applies before the purchase it
-    //      precedes — late arrival cannot flip the (ts, id) order.
+    // watermark's own millisecond. Two guarantees pinned here, on one
+    // as-of hop:
+    //  (a) a probe at ts == wm is NOT emitted while the watermark sits
+    //      on it (a <= gate would emit it one batch early);
+    //  (b) a build version landing in the admitted µs tail AFTER later
+    //      events already arrived, and before the probe in event time,
+    //      is the version that probe matches.
     import spark.implicits._
-    import graft.streaming.StreamingAttribution
     implicit val sqlCtx = spark.sqlContext
     val T = 1_700_000_000_000_000L // µs, on a whole millisecond
-    val input = MemoryStream[(Long, Long, String, Long)]
-    val events = input.toDF().toDF("userId", "eventId", "eventType", "us")
-      .select(col("userId"), col("eventId"), col("eventType"),
-        timestamp_micros(col("us")).as("eventTime"))
+    val input = MemoryStream[(String, Long, Boolean, String)] // k, us, isProbe, payload
+    val tagged = input.toDF().toDF("k", "us", "isProbe", "payload")
+      .select(col("k"), timestamp_micros(col("us")).as("eventTime"),
+        col("isProbe"), col("payload").cast("binary").as("payload"))
       .withWatermark("eventTime", "1 second")
-      .as[StreamingAttribution.TouchEvent]
-    val q = StreamingAttribution.attribute(events).writeStream
+      .as[AsOfJoin.AsOfEvent]
+    val q = AsOfJoin.join(tagged).writeStream
       .format("memory").queryName("strict_gate").outputMode("append").start()
     try {
-      // batch 1: user 1's purchase sits in wm's µs tail (T+800), user 2's
-      // exactly ON the watermark (T); the sentinel parks wm at T
-      input.addData(Seq((1L, 9L, "purchase", T + 800L), (2L, 19L, "purchase", T),
-        (-1L, -5L, "noop", T + 1_000_000L)))
+      // batch 1: key a's probe sits in wm's µs tail (T+800), key b's
+      // exactly ON the watermark (T), each with an old version; the
+      // sentinel parks wm at T
+      input.addData(Seq(("a", T - 5_000_000L, false, "a_old"), ("a", T + 800L, true, "pa"),
+        ("b", T - 5_000_000L, false, "b_old"), ("b", T, true, "pb"),
+        ("z", T + 1_000_000L, false, "noop")))
       q.processAllAvailable()
-      // batch 2: later events invoke both groups while wm == T. The
-      // strict gate must hold BOTH purchases (user 2's is at ts == wm —
-      // the <= gate finalized it here); nothing may emit yet
-      input.addData(Seq((1L, 8L, "view", T + 600_000L), (2L, 18L, "view", T + 600_000L)))
+      // batch 2: later versions invoke both keys while wm == T. The
+      // strict gate must hold BOTH probes (b's is at ts == wm); nothing
+      // may emit yet
+      input.addData(Seq(("a", T + 600_000L, false, "a_later"),
+        ("b", T + 600_000L, false, "b_later")))
       q.processAllAvailable()
       assert(spark.table("strict_gate").count() == 0,
-        "no purchase may finalize while the watermark still sits on its millisecond")
-      // batch 3: user 1's touch arrives LATE in wall-clock order but in
-      // the admitted µs tail (T+300 > wm) and BEFORE the purchase in
-      // event time — it must still win the credit
-      input.addData(Seq((1L, 3L, "click", T + 300L)))
+        "no probe may emit while the watermark still sits on its millisecond")
+      // batch 3: key a's version arrives LATE in wall-clock order but in
+      // the admitted µs tail (T+300 > wm) and BEFORE the probe in event
+      // time — the probe must match it, not a_old
+      input.addData(Seq(("a", T + 300L, false, "a_tail")))
       q.processAllAvailable()
-      // advance the watermark far past everything; timers flush the tail
+      // advance the watermark far past everything; timers flush the probes
       for (i <- 1 to 2) {
-        input.addData(Seq((-1L, -5L - i, "noop", T + i * 10_000_000_000L)))
+        input.addData(Seq(("z", T + i * 10_000_000_000L, false, "noop")))
         q.processAllAvailable()
       }
-      val got = spark.table("strict_gate").where(col("userId") >= 0)
-        .collect().map(r => (r.getAs[Long]("eventId"), r.getAs[String]("channel"))).toSet
-      assert(got == Set((9L, "click"), (19L, "direct")),
-        s"tail-admitted touch must credit its purchase; got $got")
+      val got = spark.table("strict_gate").collect()
+        .map(r => (r.getAs[String]("k"), r.getAs[Long]("probeTs"),
+          Option(r.getAs[Array[Byte]]("buildPayload")).map(new String(_)).orNull))
+        .toSet
+      assert(got == Set(("a", T + 800L, "a_tail"), ("b", T, "b_old")),
+        s"the tail-admitted version must be the one its probe matches; got $got")
     } finally q.stop()
-  }
-
-  test("attribution state survives checkpoint restart: a purchase after the restart credits a touch from before it") {
-    import java.nio.file.{Files => JFiles, Paths => JPaths}
-    import scala.jdk.CollectionConverters._
-    import graft.streaming.StreamingAttribution
-    val dir = Files.createTempDirectory("attr_restart").toString
-    val srcDir = dir + "/src"
-    JFiles.createDirectories(JPaths.get(srcDir))
-    val t1 = 1_700_000_000_000_000L              // click (µs)
-    val t2 = t1 + 3_600_000_000L                 // purchase, 1h later
-    val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, String)]
-    def runOnce(): Unit = {
-      import spark.implicits._
-      val schema = "userId LONG, eventId LONG, eventType STRING, us LONG"
-      val events = spark.readStream.schema(schema).json(srcDir)
-        .select(col("userId"), col("eventId"), col("eventType"),
-          timestamp_micros(col("us")).as("eventTime"))
-        .withWatermark("eventTime", "1 second")
-        .as[StreamingAttribution.TouchEvent]
-      val q = StreamingAttribution.attribute(events).writeStream
-        .outputMode("append")
-        .option("checkpointLocation", dir + "/ckpt")
-        .foreachBatch {
-          (b: org.apache.spark.sql.Dataset[StreamingAttribution.Attribution], _: Long) =>
-            b.collect().foreach(a => out.add((a.userId, a.eventId, a.channel)))
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    def feed(name: String, rows: (Long, Long, String, Long)*): Unit =
-      JFiles.writeString(JPaths.get(srcDir, name), rows.map { case (u, e, t, us) =>
-        s"""{"userId":$u,"eventId":$e,"eventType":"$t","us":$us}"""
-      }.mkString("", "\n", "\n"))
-    // run 1: click + purchase arrive, watermark still behind them — both
-    // buffer in state, nothing emits, the process "dies"
-    feed("f1.json", (1L, 10L, "click", t1), (1L, 11L, "purchase", t2))
-    runOnce()
-    assert(out.isEmpty, "nothing is decidable before the watermark passes")
-    // runs 2 & 3: only far-future noops for another user arrive. The
-    // restarted query must restore the buffered events AND the running
-    // last-touch from the checkpoint; the advancing watermark fires the
-    // event-time timer and the purchase finally credits the click that
-    // arrived BEFORE the first restart. (Two runs because a batch only
-    // sees the watermark checkpointed at the PREVIOUS run's end.)
-    feed("f2.json", (-1L, -1L, "noop", t2 + 10_000_000L))
-    runOnce()
-    feed("f3.json", (-1L, -2L, "noop", t2 + 20_000_000L))
-    runOnce()
-    assert(out.asScala.toSet == Set((1L, 11L, "click")),
-      s"expected the post-restart purchase to credit the pre-restart click, got ${out.asScala.toList}")
   }
 
   private def txnEvents(input: MemoryStream[(Long, Boolean, Int, String)]) = {
@@ -1304,63 +1275,6 @@ class StreamingSpec extends SparkSpec {
     val out = TxnBuffer.buffer(events, flushIncompleteAfterMs = 200L).collect()
     assert(out.map(_.txId).toSeq == Seq(1L), "incomplete txn 2 stays buffered")
     assert(out.forall(_.complete))
-  }
-
-  test("streaming funnel: out-of-order stages apply in event-time order") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingFunnel
-    val input = MemoryStream[(Long, String, Long)] // user, type, tsMs
-    val events = input.toDF().toDF("userId", "eventType", "tsMs")
-      .select(col("userId"), col("eventType"),
-        timestamp_millis(col("tsMs")).as("eventTime"))
-      .withWatermark("eventTime", "5 seconds")
-      .as[StreamingFunnel.FunnelEvent]
-    val q = StreamingFunnel.funnel(events).writeStream
-      .format("memory").queryName("funnel_out").outputMode("append").start()
-    try {
-      def got = spark.table("funnel_out").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-      // user 1's click+purchase arrive BEFORE the view, but the view's
-      // event time is earliest — buffered until the watermark decides;
-      // user 2 clicks without ever viewing
-      input.addData((1L, "click", 2000L), (1L, "purchase", 3000L), (2L, "click", 500L))
-      q.processAllAvailable()
-      input.addData((1L, "view", 1000L))
-      q.processAllAvailable()
-      assert(got.isEmpty, "nothing is decidable until the watermark passes")
-      input.addData((9L, "view", 60000L)) // advance watermark to 55s
-      q.processAllAvailable()
-      input.addData((9L, "view", 70000L)) // flush timers
-      q.processAllAvailable()
-      assert(got.filter(_._1 == 1L) ==
-        Set((1L, 1, 1000000L), (1L, 2, 2000000L), (1L, 3, 3000000L)),
-        s"user 1 must complete the funnel in event-time order, got $got")
-      assert(!got.exists(_._1 == 2L), "a click with no preceding view never counts")
-    } finally q.stop()
-  }
-
-  test("streaming funnel == batch events_funnel on the harness events table") {
-    import spark.implicits._
-    import graft.streaming.StreamingFunnel
-    val d = "/root/testdata/sf0.001"
-    val events = graft.Tables.events(spark, d)
-      .select(col("user_id").as("userId"), col("event_type").as("eventType"),
-        col("ts").as("eventTime"))
-      .where(col("eventType").isin("view", "click", "purchase"))
-      .as[StreamingFunnel.FunnelEvent]
-    val streamed = StreamingFunnel.funnel(events).collect()
-      .groupBy(_.userId)
-      .map { case (u, rs) => u -> rs.map(r => r.stage -> r.ts).toMap }
-    val batch = graft.LegacyEntry.queries("events_funnel")(spark, d).collect()
-      .map { r =>
-        def us(i: Int): Option[Long] = Option(r.getTimestamp(i))
-          .map(t => t.getTime * 1000L + (t.getNanos / 1000L) % 1000L)
-        r.getLong(0) -> Seq(1 -> us(1), 2 -> us(2), 3 -> us(3))
-          .collect { case (s, Some(t)) => s -> t }.toMap
-      }.toMap
-    assert(streamed == batch,
-      s"streaming funnel diverged from batch (streamed ${streamed.size} users, batch ${batch.size})")
   }
 
   test("streaming exact dedup: in-horizon duplicates dropped, state expires with the watermark") {

@@ -101,6 +101,31 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  test("Tables.events leaves the nanos conf as it was for a microsecond ts") {
+    val dir = freshDir("tables_events_us")
+    writeRaw(s"$dir/events.parquet/part-0.parquet",
+      """message events {
+        |  optional int64 event_id;
+        |  optional int64 ts (TIMESTAMP(MICROS,true));
+        |}""".stripMargin,
+      "event_id" -> 1L, "ts" -> 1700000000123456L)
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val saved = spark.conf.getOption(key)
+    try {
+      spark.conf.unset(key)
+      val before = spark.conf.getOption(key)
+      val df = Tables.events(spark, dir)
+      assert(spark.conf.getOption(key) == before,
+        "reading a microsecond events file must not change the session's conf")
+      assert(df.schema("ts").dataType == TimestampType)
+      assert(df.select("ts").collect().map(_.getTimestamp(0).toInstant).toSeq ==
+        Seq(java.time.Instant.ofEpochSecond(1700000000L, 123456000L)))
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("a change to an inference conf re-infers the schema") {
     val dir = freshDir("tables_conf")
     writeRaw(s"$dir/t.parquet/part-0.parquet",

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.streaming.{AsOfJoin, StreamingAttribution, StreamingDedup, StreamingFunnel, StreamingRetention, TxnBuffer}
+import graft.streaming.{AsOfJoin, StreamingDedup, TxnBuffer}
 
 /** Twin-equality replays: each stateful streaming operator re-processes
   * the SAME sf0.001 harness data its batch twin runs on — fed through a
@@ -11,9 +11,8 @@ import graft.streaming.{AsOfJoin, StreamingAttribution, StreamingDedup, Streamin
   * (oracle-green) output exactly. This is the strongest claim the
   * streaming layer makes: the incremental, state-bounded form computes
   * the very same answer as the one-shot batch form, not an approximation
-  * of it. (The funnel's BATCH-mode twin equality lives in StreamingSpec;
-  * here every replay is genuinely streaming: isStreaming = true,
-  * watermark-gated emission, event-time timers for the tail flush.)
+  * of it. Every replay is genuinely streaming: isStreaming = true,
+  * watermark-gated emission, event-time timers for the tail flush.
   */
 @Nightly
 class TwinReplaySpec extends SparkSpec {
@@ -38,9 +37,6 @@ class TwinReplaySpec extends SparkSpec {
       q.processAllAvailable()
     }
   }
-
-  private def usOf(t: java.sql.Timestamp): Long =
-    t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
 
   /** Kill-and-resume replay: the same chunked feed as [[feedChunked]],
     * but every chunk is processed by a FRESH streaming query resuming
@@ -79,43 +75,6 @@ class TwinReplaySpec extends SparkSpec {
     jsonRows.grouped(math.max(jsonRows.size / NChunks, 1)).foreach(c => feed(c))
     sentinels.foreach(s => feed(Seq(s)))
     scala.jdk.CollectionConverters.IteratorHasAsScala(out.iterator()).asScala.toSeq
-  }
-
-  test("twin replay: streaming funnel over chunked MemoryStream == batch events_funnel") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val evRows = Tables.events(spark, D)
-      .where(col("event_type").isin("view", "click", "purchase"))
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-      .sortBy(_._3).toSeq
-    val maxUs = evRows.map(_._3).max
-    val input = MemoryStream[(Long, String, Long)]
-    val events = input.toDF().toDF("userId", "eventType", "us")
-      .select(col("userId"), col("eventType"),
-        timestamp_micros(col("us")).as("eventTime"))
-      .withWatermark("eventTime", "1 second")
-      .as[StreamingFunnel.FunnelEvent]
-    val q = StreamingFunnel.funnel(events).writeStream
-      .format("memory").queryName("funnel_twin").outputMode("append").start()
-    try {
-      // sentinel type "noop" has no funnel rank: advances the watermark,
-      // never emits a stage
-      feedChunked(input, q, evRows,
-        Seq((-1L, "noop", maxUs + 10_000_000L), (-1L, "noop", maxUs + 20_000_000L)))
-      val streamed = spark.table("funnel_twin").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-        .groupBy(_._1)
-        .map { case (u, rs) => u -> rs.map(t => t._2 -> t._3).toMap }
-      val batch = LegacyEntry.queries("events_funnel")(spark, D).collect()
-        .map { r =>
-          def us(i: Int): Option[Long] = Option(r.getTimestamp(i)).map(usOf)
-          r.getLong(0) -> Seq(1 -> us(1), 2 -> us(2), 3 -> us(3))
-            .collect { case (s, Some(t)) => s -> t }.toMap
-        }.toMap
-      assert(streamed == batch,
-        s"streamed funnel (${streamed.size} users) != batch (${batch.size} users)")
-    } finally q.stop()
   }
 
   test("twin replay: streaming as-of join over chunked MemoryStream == batch join_temporal_eventtime") {
@@ -250,104 +209,6 @@ class TwinReplaySpec extends SparkSpec {
       s"restarted txn emit (${streamed.size} rows) != batch (${batch.size} rows)")
   }
 
-  test("restart replay: session windows killed between every chunk == batch events_sessionize") {
-    val rows0 = Tables.events(spark, D)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._3).toSeq
-    val maxUs = rows0.map(_._3).max
-    val json = rows0.map { case (u, e, us) =>
-      s"""{"user_id":$u,"event_id":$e,"us":$us}""" }
-    val sentinels = (1 to 3).map(i =>
-      s"""{"user_id":-1,"event_id":${-i},"us":${maxUs + i * 7_200_000_000L}}""")
-    val rows = restartReplay("sess", json, sentinels,
-      "user_id LONG, event_id LONG, us LONG") { df =>
-      df.select(col("user_id"), col("event_id"), timestamp_micros(col("us")).as("ts"))
-        .withWatermark("ts", "1 second")
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-        .agg(count(lit(1)).as("n_events"), min("event_id").as("first_event"),
-          max("event_id").as("last_event"))
-        .selectExpr("user_id", "session_window.start AS st",
-          "n_events", "first_event", "last_event")
-    }
-    val streamed = rows
-      .filter(_.getLong(0) >= 0)
-      .map(r => (r.getLong(0), r.getTimestamp(1).getTime,
-        r.getLong(2), r.getLong(3), r.getLong(4)))
-      .groupBy(_._1)
-      .map { case (u, ss) =>
-        u -> ss.sortBy(_._2).zipWithIndex
-          .map { case ((_, _, n, f, l), i) => (i + 1L, n, f, l) }.toSeq }
-    val batch = LegacyEntry.queries("events_sessionize")(spark, D).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-      .groupBy(_._1)
-      .map { case (u, ss) =>
-        u -> ss.sortBy(_._2).map { case (_, sid, n, f, l) => (sid, n, f, l) }.toSeq }
-    assert(streamed == batch,
-      s"restarted sessions (${streamed.size} users) != batch (${batch.size} users)")
-  }
-
-  test("restart replay: funnel killed between every chunk == batch events_funnel") {
-    import spark.implicits._
-    val evRows = Tables.events(spark, D)
-      .where(col("event_type").isin("view", "click", "purchase"))
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-      .sortBy(_._3).toSeq
-    val maxUs = evRows.map(_._3).max
-    val json = evRows.map { case (u, t, us) =>
-      s"""{"userId":$u,"eventType":"$t","us":$us}""" }
-    // "noop" has no funnel rank: each sentinel run advances the
-    // restored watermark one step and fires the timers it re-arms
-    val sentinels = (1 to 3).map(i =>
-      s"""{"userId":-1,"eventType":"noop","us":${maxUs + i * 10_000_000L}}""")
-    val rows = restartReplay("funnel", json, sentinels,
-      "userId LONG, eventType STRING, us LONG") { df =>
-      StreamingFunnel.funnel(df
-        .select(col("userId"), col("eventType"),
-          timestamp_micros(col("us")).as("eventTime"))
-        .withWatermark("eventTime", "1 second")
-        .as[StreamingFunnel.FunnelEvent]).toDF()
-    }
-    val streamed = rows.filter(_.getLong(0) >= 0)
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-      .groupBy(_._1)
-      .map { case (u, rs) => u -> rs.map(t => t._2 -> t._3).toMap }
-    val batch = LegacyEntry.queries("events_funnel")(spark, D).collect()
-      .map { r =>
-        def us(i: Int): Option[Long] = Option(r.getTimestamp(i)).map(usOf)
-        r.getLong(0) -> Seq(1 -> us(1), 2 -> us(2), 3 -> us(3))
-          .collect { case (s, Some(t)) => s -> t }.toMap
-      }.toMap
-    assert(streamed == batch,
-      s"restarted funnel (${streamed.size} users) != batch (${batch.size} users)")
-  }
-
-  test("restart replay: retention killed between every chunk == batch events_retention") {
-    import spark.implicits._
-    val rows0 = Tables.events(spark, D)
-      .select(col("user_id"), unix_micros(col("ts")).as("us"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy(_._2).toSeq
-    val maxUs = rows0.map(_._2).max
-    val json = rows0.map { case (u, us) => s"""{"userId":$u,"us":$us}""" }
-    val sentinels = (1 to 3).map(i =>
-      s"""{"userId":-1,"us":${maxUs + i * 10_000_000_000L}}""")
-    val rows = restartReplay("ret", json, sentinels, "userId LONG, us LONG") { df =>
-      StreamingRetention.returns(df
-        .select(col("userId"), timestamp_micros(col("us")).as("eventTime"))
-        .withWatermark("eventTime", "1 second")
-        .as[StreamingRetention.ActivityEvent]).toDF()
-    }
-    val streamed = rows.filter(_.getAs[Long]("userId") >= 0)
-      .groupBy(r => (r.getAs[Long]("cohortDayUs"), r.getAs[Int]("dayOffset")))
-      .map { case (k, rs) => k -> rs.size.toLong }
-    val batch = LegacyEntry.queries("events_retention")(spark, D).collect()
-      .map(r => (usOf(r.getTimestamp(0)), r.getInt(1)) -> r.getLong(2)).toMap
-    assert(streamed == batch,
-      s"restarted retention (${streamed.size} cells) != batch (${batch.size})")
-  }
-
   test("twin replay: streaming txn buffer over chunked MemoryStream == batch txn_buffered_emit") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -389,53 +250,6 @@ class TwinReplaySpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("twin replay: streaming session windows over chunked MemoryStream == batch events_sessionize") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val rows = Tables.events(spark, D)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._3).toSeq
-    val maxUs = rows.map(_._3).max
-    val input = MemoryStream[(Long, Long, Long)]
-    // boundary note: the batch operator starts a new session when the gap
-    // EXCEEDS 30 minutes; session_window merges overlapping [ts, ts+30m)
-    // intervals. The two agree except at a gap of exactly 30:00.000000,
-    // which µs-grained real data does not produce.
-    val agg = input.toDF().toDF("user_id", "event_id", "us")
-      .select(col("user_id"), col("event_id"), timestamp_micros(col("us")).as("ts"))
-      .withWatermark("ts", "1 second")
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-      .agg(count(lit(1)).as("n_events"), min("event_id").as("first_event"),
-        max("event_id").as("last_event"))
-    val q = agg.writeStream.format("memory").queryName("sess_twin")
-      .outputMode("append").start()
-    try {
-      // sentinels two hours past the end close every real session (its
-      // own stays open and is filtered by user_id >= 0)
-      feedChunked(input, q, rows,
-        Seq((-1L, -1L, maxUs + 7_200_000_000L), (-1L, -2L, maxUs + 7_300_000_000L)))
-      val streamed = spark.table("sess_twin")
-        .where(col("user_id") >= 0)
-        .selectExpr("user_id", "session_window.start AS st",
-          "n_events", "first_event", "last_event")
-        .collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1).getTime,
-          r.getLong(2), r.getLong(3), r.getLong(4)))
-        .groupBy(_._1)
-        .map { case (u, ss) =>
-          u -> ss.sortBy(_._2).zipWithIndex
-            .map { case ((_, _, n, f, l), i) => (i + 1L, n, f, l) }.toSeq }
-      val batch = LegacyEntry.queries("events_sessionize")(spark, D).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-        .groupBy(_._1)
-        .map { case (u, ss) =>
-          u -> ss.sortBy(_._2).map { case (_, sid, n, f, l) => (sid, n, f, l) }.toSeq }
-      assert(streamed == batch,
-        s"streamed sessions (${streamed.size} users) != batch (${batch.size} users)")
-    } finally q.stop()
-  }
-
   test("twin replay: streaming tumbling-hour counts over chunked MemoryStream == batch agg_hourly_count") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -469,145 +283,6 @@ class TwinReplaySpec extends SparkSpec {
         .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
       assert(streamed == batch,
         s"streamed hourly (${streamed.size} groups) != batch (${batch.size} groups)")
-    } finally q.stop()
-  }
-
-  test("twin replay: streaming hourly partials + shared z-finalize == batch events_error_spike") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val rows = Tables.events(spark, D)
-      .select(col("event_type"), unix_micros(col("ts")).as("us"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._2).toSeq
-    val maxUs = rows.map(_._2).max
-    val input = MemoryStream[(String, Long)]
-    // the stateful piece is the per-(type, hour) count — the proven
-    // tumbling-window shape; the corpus-wide z needs ALL hours, so the
-    // moments live in the CONSUMER-side finalize (exactly the batch
-    // arithmetic via RefOps.errorSpikeFinalize), not in a stacked
-    // stateful aggregate
-    val agg = input.toDF().toDF("event_type", "us")
-      .select(col("event_type"), timestamp_micros(col("us")).as("ts"))
-      .withWatermark("ts", "1 second")
-      .groupBy(col("event_type"), window(col("ts"), "1 hour"))
-      .agg(count(lit(1)).as("n"))
-    val q = agg.writeStream.format("memory").queryName("spike_twin")
-      .outputMode("append").start()
-    try {
-      feedChunked(input, q, rows,
-        Seq(("__wm__", maxUs + 7_200_000_000L), ("__wm__", maxUs + 14_400_000_000L)))
-      val hourly = spark.table("spike_twin")
-        .where(col("event_type") =!= "__wm__")
-        .selectExpr("event_type", "window.start AS hour", "n")
-        .groupBy("hour")
-        .agg(sum("n").as("n_total"),
-          sum(when(col("event_type") === "error", col("n")).otherwise(0L)).as("n_err"))
-      val streamed = graft.ops.RefOps.errorSpikeFinalize(hourly).collect().toSeq
-      val batch = LegacyEntry.queries("events_error_spike")(spark, D).collect().toSeq
-      assert(streamed == batch,
-        s"streamed spike frame (${streamed.size} hours) != batch (${batch.size})")
-    } finally q.stop()
-  }
-
-  test("twin replay: streaming hop-window counts over chunked MemoryStream == batch agg_hop_count") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val rows = Tables.events(spark, D)
-      .select(col("event_type"), unix_micros(col("ts")).as("us"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._2).toSeq
-    val maxUs = rows.map(_._2).max
-    val input = MemoryStream[(String, Long)]
-    // the sliding window is streaming-native: same (type, win_start, n)
-    // shape as the batch operator, compared directly once finalized
-    val agg = input.toDF().toDF("event_type", "us")
-      .select(col("event_type"), timestamp_micros(col("us")).as("ts"))
-      .withWatermark("ts", "1 second")
-      .groupBy(col("event_type"), window(col("ts"), "2 hours", "1 hour"))
-      .agg(count(lit(1)).as("n"))
-    val q = agg.writeStream.format("memory").queryName("hop_twin")
-      .outputMode("append").start()
-    try {
-      feedChunked(input, q, rows,
-        Seq(("__wm__", maxUs + 7_200_000_000L), ("__wm__", maxUs + 14_400_000_000L)))
-      val streamed = spark.table("hop_twin")
-        .where(col("event_type") =!= "__wm__")
-        .selectExpr("event_type", "window.start AS ws", "n")
-        .collect()
-        .map(r => (r.getString(0), r.getTimestamp(1).getTime) -> r.getLong(2)).toMap
-      val batch = LegacyEntry.queries("agg_hop_count")(spark, D).collect()
-        .map(r => (r.getString(0), r.getTimestamp(1).getTime) -> r.getLong(2)).toMap
-      assert(streamed == batch,
-        s"streamed hop windows (${streamed.size} groups) != batch (${batch.size} groups)")
-    } finally q.stop()
-  }
-
-  test("restart replay: hop windows killed between every chunk == batch agg_hop_count") {
-    // sliding windows keep MULTIPLE open windows per key in the state
-    // store — a distinct checkpoint format from the session-window and
-    // flatMapGroups restarts already pinned; kill-and-resume must
-    // restore every half-open window
-    val rows0 = Tables.events(spark, D)
-      .select(col("event_type"), unix_micros(col("ts")).as("us"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._2).toSeq
-    val maxUs = rows0.map(_._2).max
-    val json = rows0.map { case (t, us) => s"""{"event_type":"$t","us":$us}""" }
-    val sentinels = (1 to 3).map(i =>
-      s"""{"event_type":"__wm__","us":${maxUs + i * 7_200_000_000L}}""")
-    val rows = restartReplay("hop", json, sentinels, "event_type STRING, us LONG") { df =>
-      df.select(col("event_type"), timestamp_micros(col("us")).as("ts"))
-        .withWatermark("ts", "1 second")
-        .groupBy(col("event_type"), window(col("ts"), "2 hours", "1 hour"))
-        .agg(count(lit(1)).as("n"))
-        .selectExpr("event_type", "window.start AS ws", "n")
-    }
-    val streamed = rows.filter(_.getString(0) != "__wm__")
-      .map(r => (r.getString(0), r.getTimestamp(1).getTime) -> r.getLong(2)).toMap
-    val batch = LegacyEntry.queries("agg_hop_count")(spark, D).collect()
-      .map(r => (r.getString(0), r.getTimestamp(1).getTime) -> r.getLong(2)).toMap
-    assert(streamed == batch,
-      s"restarted hop windows (${streamed.size}) != batch (${batch.size})")
-  }
-
-  test("twin replay: streaming cumulate (6h steps) over chunked MemoryStream == batch agg_cumulate_count") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // CUMULATE = a stateful tumbling STEP aggregate (the only streaming
-    // state) + a deterministic expansion of each finalized step into the
-    // day windows it feeds — two stacked stateful aggs are illegal in
-    // append mode, and the batch operator makes the same split, so the
-    // twin streams the step agg and expands finalized rows identically
-    val rows = Tables.events(spark, D)
-      .select(col("event_type"), unix_micros(col("ts")).as("us"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._2).toSeq
-    val maxUs = rows.map(_._2).max
-    val input = MemoryStream[(String, Long)]
-    val agg = input.toDF().toDF("event_type", "us")
-      .select(col("event_type"), timestamp_micros(col("us")).as("ts"))
-      .withWatermark("ts", "1 second")
-      .groupBy(col("event_type"), window(col("ts"), "6 hours"))
-      .agg(count(lit(1)).as("n"))
-    val q = agg.writeStream.format("memory").queryName("cumulate_twin")
-      .outputMode("append").start()
-    try {
-      feedChunked(input, q, rows,
-        Seq(("__wm__", maxUs + 21_600_000_000L), ("__wm__", maxUs + 43_200_000_000L)))
-      val StepUs = 21_600_000_000L
-      val DayUs = 86_400_000_000L
-      val streamed = spark.table("cumulate_twin")
-        .where(col("event_type") =!= "__wm__")
-        .selectExpr("event_type", "unix_micros(window.start) AS step_us", "n")
-        .collect()
-        .flatMap { r =>
-          val (t, stepUs, n) = (r.getString(0), r.getLong(1), r.getLong(2))
-          val dayUs = (stepUs / DayUs) * DayUs
-          ((stepUs + StepUs) to (dayUs + DayUs) by StepUs)
-            .map(endUs => (t, dayUs, endUs) -> n)
-        }
-        .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).sum }
-      val batch = LegacyEntry.queries("agg_cumulate_count")(spark, D).collect()
-        .map(r => (r.getString(0), usOf(r.getTimestamp(1)), usOf(r.getTimestamp(2))) ->
-          r.getLong(3)).toMap
-      assert(streamed == batch,
-        s"streamed cumulate (${streamed.size} windows) != batch (${batch.size} windows)")
     } finally q.stop()
   }
 
@@ -699,79 +374,6 @@ class TwinReplaySpec extends SparkSpec {
       s"restarted upsert table (${streamed.size} keys) != batch (${batch.size})")
   }
 
-  test("twin replay: streaming attribution over chunked MemoryStream == batch events_attribution") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val rows = Tables.events(spark, D)
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        unix_micros(col("ts")).as("us"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
-      .sortBy(_._4).toSeq
-    val maxUs = rows.map(_._4).max
-    val input = MemoryStream[(Long, Long, String, Long)]
-    val events = input.toDF().toDF("userId", "eventId", "eventType", "us")
-      .select(col("userId"), col("eventId"), col("eventType"),
-        timestamp_micros(col("us")).as("eventTime"))
-      .withWatermark("eventTime", "1 second")
-      .as[StreamingAttribution.TouchEvent]
-    val q = StreamingAttribution.attribute(events).writeStream
-      .format("memory").queryName("attr_twin").outputMode("append").start()
-    try {
-      // sentinel type "noop" is a non-purchase for user -1: advances the
-      // watermark without attributing anything asserted
-      feedChunked(input, q, rows,
-        Seq((-1L, -1L, "noop", maxUs + 10_000_000L),
-          (-1L, -2L, "noop", maxUs + 20_000_000L)))
-      // the batch operator reports the channel rollup — aggregate the
-      // streamed per-purchase attributions the same way
-      val streamed = spark.table("attr_twin")
-        .where(col("userId") >= 0)
-        .groupBy("channel")
-        .agg(count(lit(1)).as("n_purchases"),
-          countDistinct(col("userId")).as("n_users"))
-        .collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      val batch = LegacyEntry.queries("events_attribution")(spark, D).collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      assert(streamed == batch,
-        s"streamed attribution $streamed != batch $batch")
-    } finally q.stop()
-  }
-
-  test("twin replay: streaming retention over chunked MemoryStream == batch events_retention") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val rows = Tables.events(spark, D)
-      .select(col("user_id"), unix_micros(col("ts")).as("us"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy(_._2).toSeq
-    val maxUs = rows.map(_._2).max
-    val input = MemoryStream[(Long, Long)]
-    val events = input.toDF().toDF("userId", "us")
-      .select(col("userId"), timestamp_micros(col("us")).as("eventTime"))
-      .withWatermark("eventTime", "1 second")
-      .as[StreamingRetention.ActivityEvent]
-    val q = StreamingRetention.returns(events).writeStream
-      .format("memory").queryName("ret_twin").outputMode("append").start()
-    try {
-      feedChunked(input, q, rows,
-        Seq((-1L, maxUs + 10_000_000_000L), (-1L, maxUs + 20_000_000_000L)))
-      // aggregate the streamed per-user returns the way the batch
-      // operator's (cohort, offset) count does; the sentinel user's own
-      // single return row is excluded
-      val streamed = spark.table("ret_twin")
-        .where(col("userId") >= 0)
-        .groupBy("cohortDayUs", "dayOffset")
-        .agg(count(lit(1)).as("n_users"))
-        .collect()
-        .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-      val batch = LegacyEntry.queries("events_retention")(spark, D).collect()
-        .map(r => (usOf(r.getTimestamp(0)), r.getInt(1)) -> r.getLong(2)).toMap
-      assert(streamed == batch,
-        s"streamed retention (${streamed.size} cells) != batch (${batch.size})")
-    } finally q.stop()
-  }
-
   test("twin replay: streaming exact dedup over chunked MemoryStream == batch keeper set") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -809,42 +411,6 @@ class TwinReplaySpec extends SparkSpec {
         s"streamed dedup kept ${streamed.size} docs, batch keeper set has ${batch.size}")
       assert(streamed.size == docs.size, "every replayed duplicate must be dropped")
     } finally q.stop()
-  }
-
-  test("restart replay: cumulate steps killed between every chunk == batch agg_cumulate_count") {
-    // cumulate's streaming state is the tumbling 6h STEP aggregate (the
-    // explode runs above it); hop pinned multiple open windows per key,
-    // this pins the single-window step under kill-and-resume, expanded
-    // identically to the batch operator's split
-    val rows0 = Tables.events(spark, D)
-      .select(col("event_type"), unix_micros(col("ts")).as("us"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._2).toSeq
-    val maxUs = rows0.map(_._2).max
-    val json = rows0.map { case (t, us) => s"""{"event_type":"$t","us":$us}""" }
-    val sentinels = (1 to 3).map(i =>
-      s"""{"event_type":"__wm__","us":${maxUs + i * 21_600_000_000L}}""")
-    val rows = restartReplay("cumulate", json, sentinels, "event_type STRING, us LONG") { df =>
-      df.select(col("event_type"), timestamp_micros(col("us")).as("ts"))
-        .withWatermark("ts", "1 second")
-        .groupBy(col("event_type"), window(col("ts"), "6 hours"))
-        .agg(count(lit(1)).as("n"))
-        .selectExpr("event_type", "unix_micros(window.start) AS step_us", "n")
-    }
-    val StepUs = 21_600_000_000L
-    val DayUs = 86_400_000_000L
-    val streamed = rows.filter(_.getString(0) != "__wm__")
-      .flatMap { r =>
-        val (t, stepUs, n) = (r.getString(0), r.getLong(1), r.getLong(2))
-        val dayUs = (stepUs / DayUs) * DayUs
-        ((stepUs + StepUs) to (dayUs + DayUs) by StepUs)
-          .map(endUs => (t, dayUs, endUs) -> n)
-      }
-      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).sum }
-    val batch = LegacyEntry.queries("agg_cumulate_count")(spark, D).collect()
-      .map(r => (r.getString(0), usOf(r.getTimestamp(1)), usOf(r.getTimestamp(2))) ->
-        r.getLong(3)).toMap
-    assert(streamed == batch,
-      s"restarted cumulate (${streamed.size} windows) != batch (${batch.size} windows)")
   }
 
   private val KmvDayUs = 86_400_000_000L

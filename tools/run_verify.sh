@@ -1,9 +1,12 @@
 #!/bin/bash
 # Compile once with sbt, then run graft.Verify directly with java (fast loop).
+# Usage: tools/run_verify.sh [SF_DIR] [OUT_DIR]; builds and checks the
+# checkout this script sits in.
 set -e
 SF_DIR=${1:-/root/testdata/sf0.01}
 OUT_DIR=${2:-/tmp/verify_out}
-cd /root/repo
+REPO=$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)
+cd "$REPO"
 sbt -batch compile 1>&2
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
@@ -18,6 +21,6 @@ SCALA_LIB=$(ls "$HOME"/.sbt/boot/scala-2.13.*/lib/scala-library.jar 2>/dev/null 
 rm -rf "$OUT_DIR"
 java $ADD_OPENS -Xmx8g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:$SCALA_LIB:/opt/spark/jars/*" \
+  -cp "$REPO/target/scala-2.13/classes:$SCALA_LIB:/opt/spark/jars/*" \
   graft.Verify "$SF_DIR" "$OUT_DIR" 1>&2
-python3 /root/repo/tools/check_oracle.py "$SF_DIR" "$OUT_DIR"
+python3 "$REPO/tools/check_oracle.py" "$SF_DIR" "$OUT_DIR"
