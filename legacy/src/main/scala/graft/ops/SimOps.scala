@@ -1963,7 +1963,7 @@ object SimOps {
     * by git); isolated fresh-JVM warm 3.44 s @ local[32] vs 4.58 s @
     * local[4] at sf0.1 (more cores HELP — many tiny stages), sf1/sf0.1
     * ratio 1.85×. The r11 gate reprobes flags in a fresh child JVM
-    * ([[graft.ReprobeChild]]) precisely so this class of key
+    * (the old bench harness's reprobe child) precisely so this class of key
     * adjudicates itself instead of standing flagged. */
   private val SemTau = 0.3
 

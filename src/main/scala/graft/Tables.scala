@@ -2,8 +2,11 @@ package graft
 
 import java.io.FileNotFoundException
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Loaders for the parquet tables the pipelines read (TESTDATA.md).
@@ -96,16 +99,12 @@ object Tables {
     * The session's confs are left as they are, except for the NANOS
     * vintage: Spark refuses that type unless
     * `spark.sql.legacy.parquet.nanosAsLong` is set, and the scan reads the
-    * conf when it runs, so it is set on the session and stays set. */
+    * conf when it runs, so it is set on the session and stays set. The
+    * vintage is read from one data file's footer on the driver, so no
+    * Spark job runs to find it. */
   def events(s: SparkSession, d: String): DataFrame = {
-    val df =
-      try table(s, d, "events")
-      catch {
-        case e: AnalysisException if e.getCondition == "PARQUET_TYPE_ILLEGAL" &&
-            e.getMessage.contains("TIMESTAMP(NANOS") =>
-          s.conf.set(NanosAsLong, "true")
-          table(s, d, "events")
-      }
+    if (tsIsNanos(s, s"$d/events.parquet")) s.conf.set(NanosAsLong, "true")
+    val df = table(s, d, "events")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         df.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
@@ -123,4 +122,29 @@ object Tables {
     }
   }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
+
+  /** Whether the parquet table at `path` (a file, or a directory of part
+    * files) stores `ts` as TIMESTAMP(NANOS), from the footer of one of its
+    * data files. A missing table reads as false; the scan then reports it. */
+  private def tsIsNanos(s: SparkSession, path: String): Boolean = {
+    val conf = s.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    def isData(f: FileStatus): Boolean =
+      f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith(".")
+    val file =
+      try fs.listStatus(p).find(isData)
+      catch { case _: FileNotFoundException => None }
+    file.exists { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      try {
+        val schema = reader.getFileMetaData.getSchema
+        schema.containsField("ts") &&
+          (schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+            case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+            case _ => false
+          })
+      } finally reader.close()
+    }
+  }
 }

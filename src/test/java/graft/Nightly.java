@@ -8,8 +8,9 @@ import java.lang.annotation.Target;
 import org.scalatest.TagAnnotation;
 
 /**
- * Class-level ScalaTest tag for the long-exposure suites (streaming
- * twin replays, determinism/corrupt-input/empty-input sweeps): excluded
+ * Class-level ScalaTest tag for the long-exposure suites (the curation
+ * twin replays and the registry smoke, determinism, corrupt-input and
+ * empty-input sweeps): excluded
  * from the DEFAULT {@code sbt test} tier so a bounded test window gets a
  * COMPLETED run with a summary line. Run the full set with
  * {@code SPARK_GRAFT_TEST_FULL=1 sbt test}.
