@@ -20,9 +20,10 @@ package graft.app
   *  - `JSON_QUERY(x, '$.p[*]')` → `json_query(x, '$.p')`
   *  - `FOR SYSTEM_TIME AS OF <t>` stripped: against a batch/static right
   *    side the plain join IS the processing-time lookup (stream-static
-  *    re-read per micro-batch, README.md:256-266); the event-time form
-  *    over versioned CDC streams routes to graft.streaming.AsOfJoin
-  *    instead (SURVEY.md §7.3).
+  *    re-read per micro-batch, README.md:256-266). The event-time form
+  *    over versioned CDC streams is not rewritten here: scenario 6 runs
+  *    it as `Scenarios.q06Enriched` (graft.streaming.EnrichAsOf) and a
+  *    single temporal join as graft.streaming.AsOfJoin (SURVEY.md §7.3).
   */
 object FlinkSqlShim {
 

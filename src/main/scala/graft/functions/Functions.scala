@@ -51,8 +51,4 @@ object Functions {
   /** `FROM_BASE64(s)` returning STRING.
     * Reference: 05-kafka-logical-msg-flink.json:14, README.md:400. */
   def fromBase64(s: Column): Column = unbase64(s).cast("string")
-
-  /** `TO_TIMESTAMP_LTZ(millis, 3)` — epoch millis to timestamp.
-    * Reference: 03-kafka-cdc-flink-jdbc.json:8. */
-  def toTimestampLtz(millis: Column): Column = timestamp_millis(millis)
 }

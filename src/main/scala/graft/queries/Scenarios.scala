@@ -76,60 +76,53 @@ object Scenarios {
 
   /** Scenario 6 — the full event-time temporal pipeline
     * (06-flink-cdc-temporal-join.json:30) over five changelog streams:
-    * unnest orders.pizzas, then four chained as-of joins (each dimension
-    * at the ORDER's event time), then the JSON aggregation. Works on
-    * batch DataFrames too (as-of degenerates to latest-version match).
+    * unnest orders.pizzas, look up the four dimensions as of the ORDER's
+    * event time, then the JSON aggregation. Works on batch DataFrames too
+    * (the whole input is one step, so every order emits).
     *
     * Inputs carry their own `event_time` column (the Debezium source
     * timestamp metadata column).
     *
-    * STREAMING CALLERS: the chained as-of joins stream (disable
-    * `spark.sql.streaming.statefulOperator.checkCorrectness.enabled`,
-    * see graft.streaming.AsOfJoin's chaining note), but the final
-    * groupBy/collect_list does NOT — the join output has no watermark
-    * attribute, so append-mode aggregation is rejected and update mode
-    * would emit growing partial arrays. Run the chain with this
-    * function's pre-aggregation shape and do the aggregation in
-    * foreachBatch keyed by order_id (graft.streaming.ChangelogAgg is the
-    * ready-made pattern); q06TemporalJoin as-is is the batch form.
+    * STREAMING CALLERS: [[q06Enriched]] streams as one stateful operator
+    * (graft.streaming.EnrichAsOf) in append mode, with no stateful
+    * operator after it, so Spark's correctness check stays on. The final
+    * groupBy/collect_list does NOT stream: the enriched rows have no
+    * watermark attribute, so append-mode aggregation is rejected and
+    * update mode would emit growing partial arrays. Run [[q06Enriched]]
+    * and do the aggregation in foreachBatch keyed by order_id
+    * (graft.streaming.ChangelogAgg is the ready-made pattern);
+    * q06TemporalJoin as-is is the batch form.
     */
   def q06TemporalJoin(orders: DataFrame, pizzas: DataFrame,
       assignments: DataFrame, clients: DataFrame, tables: DataFrame,
       delay: String = "0 seconds"): DataFrame =
     q06Aggregate(q06Enriched(orders, pizzas, assignments, clients, tables, delay))
 
-  /** The streaming-safe part of scenario 6: unnest + the four chained
-    * as-of joins, one output row per (order, pizza occurrence). Streaming
+  /** The streaming-safe part of scenario 6: the four as-of lookups in one
+    * stateful operator (graft.streaming.EnrichAsOf), one output row per
+    * (order, pizza occurrence): `order_id, ta_id, pizza_id, event_time`,
+    * then the dimensions' columns prefixed `pz_`, `ta_`, `cl_` and `tb_`
+    * (the assignment's `client_id` and `table_id` unprefixed). `delay` is
+    * each dimension's watermark delay. Streaming
     * callers run this, then apply [[q06Aggregate]] per micro-batch in
-    * foreachBatch (all rows of an order share its event time, so they
-    * flush in the same micro-batch and each batch holds complete order
-    * groups) and upsert keyed by order_id — see the StreamingSpec
-    * end-to-end test. */
+    * foreachBatch (all rows of an order emit together, so each batch
+    * holds complete order groups) and upsert keyed by order_id — see the
+    * StreamingSpec end-to-end test. An order delivered twice with the
+    * same event time before it emits emits once. */
   def q06Enriched(orders: DataFrame, pizzas: DataFrame,
       assignments: DataFrame, clients: DataFrame, tables: DataFrame,
-      delay: String = "0 seconds"): DataFrame = {
-    import graft.streaming.AsOfJoin.joinDataFramesWide
-    val exploded = orders.select(
-      col("id").as("order_id"), col("table_assignment_id"),
-      explode(col("pizzas")).as("pizza_id"), col("event_time"))
-    val withPizza = joinDataFramesWide(
-      exploded, pizzas.select(col("id").as("pizza_id"), col("name"), col("price"),
-        col("event_time")),
-      "pizza_id", "event_time", "pz_", delay)
-    val withAssign = joinDataFramesWide(
-      withPizza.withColumnRenamed("table_assignment_id", "ta_id"),
-      assignments.select(col("id").as("ta_id"), col("client_id"), col("table_id"),
-        col("event_time")),
-      "ta_id", "event_time", "ta_", delay)
-    val withClient = joinDataFramesWide(
-      withAssign.withColumnRenamed("ta_client_id", "client_id"),
-      clients.select(col("id").as("client_id"), col("name"), col("event_time")),
-      "client_id", "event_time", "cl_", delay)
-    joinDataFramesWide(
-      withClient.withColumnRenamed("ta_table_id", "table_id"),
-      tables.select(col("id").as("table_id"), col("name"), col("event_time")),
-      "table_id", "event_time", "tb_", delay)
-  }
+      delay: String = "0 seconds"): DataFrame =
+    graft.streaming.EnrichAsOf.enrich(
+        orders.select(col("id").as("order_id"), col("table_assignment_id").as("ta_id"),
+          col("pizzas"), col("event_time")),
+        pizzas.select(col("id").as("pizza_id"), col("name"), col("price"), col("event_time")),
+        assignments.select(col("id").as("ta_id"), col("client_id"), col("table_id"),
+          col("event_time")),
+        clients.select(col("id").as("client_id"), col("name"), col("event_time")),
+        tables.select(col("id").as("table_id"), col("name"), col("event_time")),
+        delay)
+      .withColumnRenamed("ta_client_id", "client_id")
+      .withColumnRenamed("ta_table_id", "table_id")
 
   /** Scenario 6's GROUP BY + JSON_ARRAYAGG over the enriched rows. */
   def q06Aggregate(enriched: DataFrame): DataFrame =
@@ -138,11 +131,4 @@ object Scenarios {
         col("tb_name").as("table_name"))
       .agg(jsonArrayAggSorted(
         struct(col("pz_name").as("pizza"), col("pz_price").as("price"))).as("pizzas"))
-
-  /** Vestigial demo (scripts/pipeline_evolution.md:4-6): hourly session
-    * counts per user. */
-  def q07HourlySessions(users: DataFrame, sessions: DataFrame): DataFrame =
-    sessions.join(users, sessions("user_id") === users("id"))
-      .groupBy(col("username"), hour(col("session_time")).as("hr"))
-      .agg(count(lit(1)).as("n"))
 }

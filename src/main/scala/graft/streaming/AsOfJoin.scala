@@ -47,15 +47,16 @@ import graft.expressions.RowCodec
   *   operator's state partitions in one task. A side that already has
   *   that many partitions or fewer is left as it is.
   *
-  * Chaining (scenario 6 runs FOUR of these back to back,
-  * 06-flink-cdc-temporal-join.json:30): use [[joinDataFramesWide]] per
-  * hop. Rows emit at the watermark boundary, so Spark's global-watermark
-  * correctness check flags the downstream op — disable
+  * Chaining: [[joinDataFramesWide]]'s output can probe another hop.
+  * Scenario 6 does not chain (its four lookups share the order's event
+  * time and run in one operator, [[EnrichAsOf]]). Rows emit at the
+  * watermark boundary, so Spark's global-watermark correctness check
+  * flags the downstream op — disable
   * `spark.sql.streaming.statefulOperator.checkCorrectness.enabled` for
-  * the chained query. That is sound for THIS operator because late
-  * probes are matched against the retained version history rather than
-  * dropped; the residual effect is bounded staleness when a dim version
-  * between a late probe's time and the watermark was already GC'd.
+  * a chained query. Late probes that reach a hop are matched against its
+  * retained version history, but the downstream hop's late filter drops
+  * a row emitted at exactly the previous watermark (a watermark tie,
+  * see StreamingSpec's two-hop tie test).
   *
   * Payloads travel as Spark's own UnsafeRow bytes
   * ([[graft.expressions.StructToBinary]]) — schema-generic like JSON,
@@ -93,7 +94,8 @@ object AsOfJoin {
   /** `wm` in µs (watermark ms × 1000). */
   private def flush(key: String, st: AsOfState, wm: Long):
       (List[AsOfJoined], AsOfState) = {
-    val sortedBuilds = st.builds.sortBy(_._1)
+    val sortedBuilds = st.builds.sortBy(_._1).toVector
+    def time(i: Int) = sortedBuilds(i)._1
     // STRICTLY below the watermark: Spark's late filter admits the µs
     // tail (wm, wm+999] of the watermark's own millisecond (measured —
     // see EventTimeOps), so a build row in that tail may still arrive;
@@ -104,13 +106,11 @@ object AsOfJoin {
     // the drop.
     val (ready, pending) = st.probes.partition(e => EventTimeOps.ripe(e._1, wm))
     val out = ready.sortBy(_._1).map { case (pts, ppay) =>
-      val m = sortedBuilds.takeWhile(_._1 <= pts).lastOption
+      val m = sortedBuilds.lift(EventTimeOps.asOf(sortedBuilds.size, pts)(time))
       AsOfJoined(key, pts, ppay, m.map(_._1), m.map(_._2))
     }
-    // GC: keep the newest version at-or-before the watermark + all after.
-    val cutoffIdx = sortedBuilds.lastIndexWhere(_._1 <= wm)
-    val kept = if (cutoffIdx <= 0) sortedBuilds else sortedBuilds.drop(cutoffIdx)
-    (out, AsOfState(kept, pending))
+    val kept = sortedBuilds.drop(EventTimeOps.firstKept(sortedBuilds.size, wm)(time))
+    (out, AsOfState(kept.toList, pending))
   }
 
   private def updateFn(streaming: Boolean)(key: String, rows: Iterator[AsOfEvent],

@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.streaming.GroupState
 
-/** The event-time scaffolding of the buffer-until-watermark stateful
-  * operator [[AsOfJoin]], its only user. The boundary conventions:
+/** The event-time scaffolding and the as-of rule of the
+  * buffer-until-watermark stateful operators [[AsOfJoin]] and
+  * [[EnrichAsOf]]. The boundary conventions:
   *
   *  - timestamps are MICROSECONDS end-to-end (the parquet feed's grain);
   *  - a buffered row is ripe only when the watermark has STRICTLY
@@ -39,6 +40,25 @@ private[streaming] object EventTimeOps {
 
   /** Strict ripeness gate — see the class note for why never `<=`. */
   def ripe(tsMicros: Long, wmMicros: Long): Boolean = tsMicros < wmMicros
+
+  /** The as-of rule over `n` versions sorted by time (`time(i)`, µs):
+    * the index of the newest version at or before `ts` (the last of
+    * equal times), or -1 if there is none. */
+  def asOf(n: Int, ts: Long)(time: Int => Long): Int = {
+    var lo = 0
+    var hi = n
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (time(mid) <= ts) lo = mid + 1 else hi = mid
+    }
+    lo - 1
+  }
+
+  /** Version GC at watermark `wm` (µs): of `n` versions sorted by time,
+    * the index of the first to keep. A version superseded at or before
+    * the watermark can match no probe still to come, so the version in
+    * effect at the watermark and all later ones stay. */
+  def firstKept(n: Int, wm: Long)(time: Int => Long): Int = math.max(asOf(n, wm)(time), 0)
 
   /** Arm the event-time timer to fire once the watermark passes the
     * earliest buffered event. */

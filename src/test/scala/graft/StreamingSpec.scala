@@ -850,6 +850,118 @@ class StreamingSpec extends SparkSpec {
       """[{"pizza":"Master Splinter","price":8},{"pizza":"Master Splinter","price":8}]""")
   }
 
+  /** Scenario 6's five inputs as MemoryStreams (event times in ms) with
+    * one version of each dimension at 1 000 ms (pizza 1, assignment 2 ->
+    * client 3 and table 4), `q06Enriched` over them, and a keyed sink:
+    * each micro-batch aggregated with `q06Aggregate` and upserted by
+    * order_id into `dir/result`. `emitted` lists the order ids each
+    * micro-batch aggregated. The query runs with Spark's default confs. */
+  private class Scenario6Keyed(dir: String) {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val orders = MemoryStream[(Int, Int, Seq[Int], Long)]
+    val pizzas = MemoryStream[(Int, String, Int, Long)]
+    val assigns = MemoryStream[(Int, Int, Int, Long)]
+    val clients = MemoryStream[(Int, String, Long)]
+    val tabs = MemoryStream[(Int, String, Long)]
+    private def ts(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("event_time", timestamp_millis(col("tsMs"))).drop("tsMs")
+    val enriched = graft.queries.Scenarios.q06Enriched(
+      ts(orders.toDF().toDF("id", "table_assignment_id", "pizzas", "tsMs")),
+      ts(pizzas.toDF().toDF("id", "name", "price", "tsMs")),
+      ts(assigns.toDF().toDF("id", "client_id", "table_id", "tsMs")),
+      ts(clients.toDF().toDF("id", "name", "tsMs")),
+      ts(tabs.toDF().toDF("id", "name", "tsMs")))
+    val emitted = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    pizzas.addData((1, "Master Splinter", 8, 1000L))
+    assigns.addData((2, 3, 4, 1000L))
+    clients.addData((3, "Wall Smith", 1000L))
+    tabs.addData((4, "Leonardo", 1000L))
+
+    /** A heartbeat row (id 99) on every dimension, as the benchmark's
+      * idle dimensions send, then every micro-batch that is due. */
+    def heartbeat(q: org.apache.spark.sql.streaming.StreamingQuery, tsMs: Long): Unit = {
+      pizzas.addData((99, "x", 0, tsMs))
+      assigns.addData((99, 0, 0, tsMs))
+      clients.addData((99, "x", tsMs))
+      tabs.addData((99, "x", tsMs))
+      q.processAllAvailable()
+    }
+
+    def start(): org.apache.spark.sql.streaming.StreamingQuery = enriched.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", dir + "/ckpt")
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        val agg = graft.queries.Scenarios.q06Aggregate(batch).localCheckpoint()
+        agg.select("order_id").collect().foreach(r => emitted.add(r.getInt(0)))
+        if (!agg.isEmpty)
+          UpsertSink.mergeBatch(agg.withColumn("_v", lit(0L)), Seq("order_id"), "_v",
+            dir + "/result")
+        ()
+      }
+      .start()
+
+    def result(): Map[Int, (String, String, String)] =
+      UpsertSink.readKeyedTable(spark, dir + "/result").get
+        .select("order_id", "client_name", "table_name", "pizzas").collect()
+        .map(r => r.getInt(0) -> (r.getString(1), r.getString(2), r.getString(3))).toMap
+  }
+
+  test("scenario 6: an order stamped at a heartbeat's event time reaches the keyed result once (watermark tie)") {
+    // Order 1 is stamped at the first heartbeat's event time, so the
+    // watermark lands exactly on it; order 2, 2 s earlier, is the
+    // control. The order must wait for the watermark to pass it, then
+    // be emitted once, with nothing downstream to drop it as late.
+    val s = new Scenario6Keyed(Files.createTempDirectory("s6tie").toString)
+    s.orders.addData((1, 2, Seq(1), 5000L), (2, 2, Seq(1), 3000L))
+    val q = s.start()
+    try {
+      q.processAllAvailable()
+      s.heartbeat(q, 5000L)
+      assert(q.lastProgress.eventTime.get("watermark") == "1970-01-01T00:00:05.000Z",
+        "the watermark must land on order 1's event time")
+      s.heartbeat(q, 100000L)
+      s.heartbeat(q, 200000L)
+    } finally q.stop()
+    val ids = scala.jdk.CollectionConverters.IteratorHasAsScala(s.emitted.iterator()).asScala.toSeq
+    assert(ids.count(_ == 2) == 1, s"the control order must be emitted once, emitted $ids")
+    assert(ids.count(_ == 1) == 1, s"the tied order must be emitted once, emitted $ids")
+    val want = ("Wall Smith", "Leonardo", """[{"pizza":"Master Splinter","price":8}]""")
+    assert(s.result() == Map(1 -> want, 2 -> want))
+  }
+
+  test("scenario 6: an order delivered twice in one micro-batch keeps its pizza count") {
+    // order 1 holds pizza 1 twice (UNNEST keeps both); two deliveries of
+    // the same order event must not double them
+    val s = new Scenario6Keyed(Files.createTempDirectory("s6redeliver").toString)
+    s.orders.addData((1, 2, Seq(1, 1), 5000L))
+    s.orders.addData((1, 2, Seq(1, 1), 5000L))
+    val q = s.start()
+    try {
+      q.processAllAvailable()
+      s.heartbeat(q, 100000L)
+      s.heartbeat(q, 200000L)
+    } finally q.stop()
+    val ids = scala.jdk.CollectionConverters.IteratorHasAsScala(s.emitted.iterator()).asScala.toSeq
+    assert(ids == Seq(1), s"order 1 must be emitted once, emitted $ids")
+    assert(s.result()(1)._3 ==
+      """[{"pizza":"Master Splinter","price":8},{"pizza":"Master Splinter","price":8}]""")
+  }
+
+  test("scenario 6 plan: the four as-of lookups run in one stateful operator") {
+    import org.apache.spark.sql.execution.streaming.operators.stateful.flatmapgroupswithstate.FlatMapGroupsWithStateExec
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val s = new Scenario6Keyed(Files.createTempDirectory("s6plan").toString)
+    s.orders.addData((1, 2, Seq(1), 5000L))
+    val q = s.start()
+    try {
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      val stateful = plan.collect { case p: FlatMapGroupsWithStateExec => p }
+      assert(stateful.size == 1, s"${stateful.size} stateful operators in\n$plan")
+    } finally q.stop()
+  }
+
   test("streaming as-of join: many source blocks run in a bounded number of tasks, same rows as batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

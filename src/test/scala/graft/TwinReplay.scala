@@ -38,9 +38,12 @@ trait TwinReplay extends SparkSpec {
     * batch form. `sentinels` are extra far-future rows, each fed in its
     * own run (a resumed batch only sees the watermark checkpointed at
     * the previous run's end, so flushing the tail takes one run per
-    * watermark step plus one for the timers it arms). */
+    * watermark step plus one for the timers it arms). `each` is applied
+    * to every micro-batch of `mk`'s output before its rows are kept (a
+    * per-batch aggregation that cannot stream). */
   protected def restartReplay(tag: String, jsonRows: Seq[String],
-      sentinels: Seq[String], schema: String)(
+      sentinels: Seq[String], schema: String,
+      each: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = identity)(
       mk: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] = {
     import java.nio.file.{Files => JFiles, Paths => JPaths}
     val dir = JFiles.createTempDirectory(s"twin_restart_$tag").toString
@@ -57,7 +60,7 @@ trait TwinReplay extends SparkSpec {
         .outputMode("append")
         .option("checkpointLocation", s"$dir/ckpt")
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          b.collect().foreach(out.add)
+          each(b).collect().foreach(out.add)
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       q.awaitTermination()

@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import graft.queries.Scenarios
 import graft.streaming.{AsOfJoin, TxnBuffer}
 
 /** Twin-equality replays: each stateful streaming operator re-processes
@@ -14,7 +16,8 @@ import graft.streaming.{AsOfJoin, TxnBuffer}
   * of it. Every replay is genuinely streaming: isStreaming = true,
   * watermark-gated emission, event-time timers for the tail flush.
   * The replays cover the paper's stateful path: the as-of join (in
-  * memory, on RocksDB, and killed between chunks), the transaction
+  * memory, on RocksDB, and killed between chunks), scenario 6's
+  * enrichment and aggregation (killed between chunks), the transaction
   * buffer, the hourly window counts and the keyed upsert sink.
   */
 class TwinReplaySpec extends TwinReplay {
@@ -119,6 +122,57 @@ class TwinReplaySpec extends TwinReplay {
         if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSet
     assert(streamed == batch,
       s"restarted as-of (${streamed.size} rows) != batch (${batch.size} rows)")
+  }
+
+  test("restart replay: scenario 6 killed between every chunk == batch q06TemporalJoin") {
+    // one JSON stream of all five inputs of q06Enriched, told apart by
+    // `kind`, at distinct event times: the first version of every
+    // dimension, then orders mixed with price changes, assignment moves
+    // (to an unknown client too) and renames; order refs include an
+    // unknown assignment. Each run's micro-batch is aggregated with
+    // q06Aggregate, as the keyed sink does. Heartbeat rows (kind hb)
+    // reach all four dimensions, so each sentinel moves the watermark.
+    val rnd = new scala.util.Random(6)
+    val first = (1 to 4).map(i => s""""kind":"pizza","id":$i,"name":"pizza $i","price":${5 + i}""") ++
+      (1 to 5).map(i => s""""kind":"client","id":$i,"name":"client $i"""") ++
+      (1 to 3).map(i => s""""kind":"table","id":$i,"name":"table $i"""") ++
+      (1 to 6).map(i =>
+        s""""kind":"assignment","id":$i,"client_id":${1 + i % 5},"table_id":${1 + i % 3}""")
+    val later = (1 to 60).map { i =>
+      rnd.nextInt(8) match {
+        case 0 => s""""kind":"pizza","id":${1 + rnd.nextInt(4)},"name":"pizza","price":${rnd.nextInt(20)}"""
+        case 1 => s""""kind":"assignment","id":${1 + rnd.nextInt(6)},""" +
+          s""""client_id":${1 + rnd.nextInt(6)},"table_id":${1 + rnd.nextInt(3)}"""
+        case 2 => s""""kind":"client","id":${1 + rnd.nextInt(5)},"name":"client v$i""""
+        case 3 => s""""kind":"table","id":${1 + rnd.nextInt(3)},"name":"table v$i""""
+        case _ => s""""kind":"order","id":$i,"table_assignment_id":${1 + rnd.nextInt(7)},""" +
+          s""""pizzas":[${Seq.fill(1 + rnd.nextInt(3))(1 + rnd.nextInt(4)).mkString(",")}]"""
+      }
+    }
+    val json = (first ++ later).zipWithIndex.map { case (r, i) => s"""{$r,"ms":${10000 + 100 * i}}""" }
+    val sentinels = (1 to 3).map(i => s"""{"kind":"hb","id":-1,"ms":${100000 * i}}""")
+    val schema = "kind STRING, id INT, name STRING, price INT, client_id INT, table_id INT, " +
+      "table_assignment_id INT, pizzas ARRAY<INT>, ms LONG"
+    type Q6 = (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, String) => DataFrame
+    def scenario6(q: Q6)(df: DataFrame): DataFrame = {
+      def input(kinds: Seq[String], cols: String*) = df.where(col("kind").isin(kinds: _*))
+        .select(cols.map(col) :+ timestamp_millis(col("ms")).as("event_time"): _*)
+      q(input(Seq("order"), "id", "table_assignment_id", "pizzas"),
+        input(Seq("pizza", "hb"), "id", "name", "price"),
+        input(Seq("assignment", "hb"), "id", "client_id", "table_id"),
+        input(Seq("client", "hb"), "id", "name"),
+        input(Seq("table", "hb"), "id", "name"), "0 seconds")
+    }
+    def rows(rs: Seq[Row]) = rs.map(r => (r.getAs[Int]("order_id"), r.getAs[String]("client_name"),
+      r.getAs[String]("table_name"), r.getAs[String]("pizzas"))).sortBy(_._1)
+    val streamed = rows(restartReplay("q06", json, sentinels, schema,
+      each = Scenarios.q06Aggregate)(scenario6(Scenarios.q06Enriched)))
+    import spark.implicits._
+    val batch = rows(scenario6(Scenarios.q06TemporalJoin)(
+      spark.read.schema(schema).json(json.toDS())).collect().toSeq)
+    assert(batch.size == later.count(_.contains("order")))
+    assert(streamed == batch,
+      s"restarted scenario 6 (${streamed.size} orders) != batch (${batch.size} orders)")
   }
 
   test("restart replay: txn buffer killed between every chunk == batch txn_buffered_emit") {
